@@ -1,8 +1,12 @@
 package graft.api
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import graft.engine._
 
 /** User-facing facade with the reference's exact operator surface — a
@@ -26,6 +30,18 @@ import graft.engine._
   *
   * Error contract preserved: extraction logs and returns None instead of
   * raising (`sql.py:166-171`); mutations validate inputs.
+  *
+  * Known-schema contract: a table's schema is inferred from its parquet
+  * footers once — at `connect()` or on the engine's first touch of the
+  * table — and kept. Every later read of the table (mutation targets,
+  * refreshed views) passes that schema to the reader, so no call pays a
+  * schema-inference job; the files themselves are still listed fresh on
+  * every read, so rows an outside writer appends are never dropped by a
+  * rewrite. The engine's own writes cannot make the kept schema stale:
+  * rewrites project the target's columns and appends must match the
+  * table's column names and types. Changing a table's schema from
+  * outside the engine is out of contract, as an `ALTER TABLE` behind the
+  * reference's back is; a new engine (or `connect()`) picks it up.
   */
 final class FlowEngine(val spark: SparkSession, warehouse: String) {
 
@@ -35,12 +51,22 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
   // own temp views, which share the session catalog
   private val registered = scala.collection.mutable.Set.empty[String]
 
+  private val schemas = scala.collection.mutable.Map.empty[String, StructType]
+
   private def tablePath(table: String): String = s"$warehouse/$table.parquet"
+
+  /** The table's kept schema, inferred from its footers on first touch. */
+  private def schemaOf(table: String): StructType =
+    schemas.getOrElseUpdate(table, spark.read.parquet(tablePath(table)).schema)
+
+  /** The table's current files, read with the kept schema. */
+  private def read(table: String): DataFrame =
+    spark.read.schema(schemaOf(table)).parquet(tablePath(table))
 
   /** "Open the connection": register every `<table>.parquet` under the
     * warehouse as a temp view so `getData` can run arbitrary SQL against
     * them (the reference's connect, `sql.py:36-58`, with the catalog in
-    * place of a socket). */
+    * place of a socket). Each table's schema is (re)inferred here. */
   def connect(): Try[Seq[String]] = Try {
     val root = new Path(warehouse)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -48,7 +74,9 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
       .map(_.getPath.getName).filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).sorted
     tables.foreach { t =>
-      spark.read.parquet(tablePath(t)).createOrReplaceTempView(t)
+      val df = spark.read.parquet(tablePath(t))
+      schemas(t) = df.schema
+      df.createOrReplaceTempView(t)
       registered += t
     }
     log.message = s"Connected: ${tables.size} tables registered"
@@ -110,77 +138,75 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
     * (The reference's MSSQL connection always sees current data.) */
   private def refreshTable(table: String): Unit = {
     spark.catalog.refreshByPath(tablePath(table))
-    if (registered.contains(table))
-      spark.read.parquet(tablePath(table)).createOrReplaceTempView(table)
+    if (registered.contains(table)) read(table).createOrReplaceTempView(table)
   }
 
-  /** Chunked append (`insert_data`, `sql.py:174-188`): `chunkRows` maps
-    * the reference's chunk size onto a partition count. The input is
-    * persisted around the count + write so the records plan executes
-    * once, not twice (and a non-deterministic input cannot yield a
-    * chunk count inconsistent with the rows written). */
+  /** Chunked append (`insert_data`, `sql.py:174-188`): `chunkRows` is the
+    * reference's chunk size, here the most rows any one written file
+    * holds (`maxRecordsPerFile`); the chunks of one call are written in
+    * parallel and commit once. The records must carry the table's column
+    * names and types (order and nullability aside); appending to a
+    * missing table creates it with the records' schema. */
   def insertData(table: String, records: DataFrame, chunkRows: Int = 10000): Unit = {
-    // only unpersist what THIS call persisted: if the caller already
-    // persisted this exact frame, a finally-unpersist here would drop
-    // their cache entry as a side effect
-    val wePersisted =
-      records.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (wePersisted)
-      records.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ceil, not floor: floor put up to 2·chunkRows-1 rows in one chunk
-      val n = records.count()
-      val parts = math.max(1L, (n + chunkRows - 1) / math.max(1, chunkRows)).toInt
-      Sinks.append(records, tablePath(table), parts)
-    } finally if (wePersisted) records.unpersist()
+    val path = tablePath(table)
+    if (!schemas.contains(table) && !exists(path)) schemas(table) = records.schema
+    val known = schemaOf(table)
+    val got = records.schema.fields.map(f => f.name -> f.dataType).toMap
+    require(got.size == known.length && known.forall(f =>
+        got.get(f.name).exists(DataTypeUtils.equalsIgnoreNullability(_, f.dataType))),
+      s"records schema ${records.schema.simpleString} does not match table " +
+        s"$table's ${known.simpleString}")
+    Sinks.append(records.select(known.fieldNames.toIndexedSeq.map(col): _*), path,
+      maxRecordsPerFile = chunkRows)
     refreshTable(table)
+  }
+
+  private def exists(path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Keyed update (`update_data`, `sql.py:191-249`): the per-record
     * UPDATE loop becomes one join + rewrite. Accepts in-memory records
-    * like the reference's `list[dict]`. */
+    * like the reference's `list[dict]`; they become a local relation,
+    * which the planner can size, so a small update set is broadcast
+    * instead of shuffling the table. */
   def updateData(table: String, records: Seq[Row], keys: Seq[String]): Unit = {
     require(records.nonEmpty, "update records must be non-empty")
     require(records.head.schema != null,
       "update records must carry a schema (build rows with a case class, " +
         "Row + RowEncoder, or createDataFrame with an explicit StructType; " +
         "bare Row(...) has no schema)")
-    val target = spark.read.parquet(tablePath(table))
-    val updates = spark.createDataFrame(
-      spark.sparkContext.parallelize(records), records.head.schema)
+    val updates = spark.createDataFrame(records.asJava, records.head.schema)
     require(keys.forall(updates.columns.contains),
       s"keys ${keys.mkString(",")} must be present in update records")
-    val out = Mutations.applyUpdates(target, updates, keys)
-    Sinks.overwriteInPlace(spark, out, tablePath(table))
-    refreshTable(table)
+    rewrite(table)(Mutations.applyUpdates(_, updates, keys))
   }
 
   /** Set-oriented merge from another table (`update_from_table`,
     * `sql.py:253-289`; first updates column list = all non-key source
     * columns, mirroring `sql.py:271`'s "first column is the key"). */
-  def updateFromTable(table: String, source: DataFrame, keys: Seq[String]): Unit = {
-    val target = spark.read.parquet(tablePath(table))
-    val out = Mutations.applyUpdates(target, source, keys)
-    Sinks.overwriteInPlace(spark, out, tablePath(table))
-    refreshTable(table)
-  }
+  def updateFromTable(table: String, source: DataFrame, keys: Seq[String]): Unit =
+    rewrite(table)(Mutations.applyUpdates(_, source, keys))
 
   def truncateTable(table: String): Unit = {
-    Sinks.truncate(spark, tablePath(table))
+    Sinks.truncate(spark, tablePath(table), schemaOf(table))
     refreshTable(table)
   }
 
   def deleteData(table: String): Unit = {
-    Sinks.deleteAll(spark, tablePath(table))
+    Sinks.deleteAll(spark, tablePath(table), schemaOf(table))
     refreshTable(table)
   }
 
   /** Conditional delete (`sql.py:321-332`): predicate string parsed by
     * Catalyst, rows matching it removed. */
-  def deleteDataWithConditions(table: String, conditions: String): Unit = {
-    val target = spark.read.parquet(tablePath(table))
-    val out = Mutations.deleteWhere(target, conditions)
-    Sinks.overwriteInPlace(spark, out, tablePath(table))
+  def deleteDataWithConditions(table: String, conditions: String): Unit =
+    rewrite(table)(Mutations.deleteWhere(_, conditions))
+
+  /** Replace the table with `f` of its current rows. */
+  private def rewrite(table: String)(f: DataFrame => DataFrame): Unit = {
+    Sinks.overwriteInPlace(spark, f(read(table)), tablePath(table))
     refreshTable(table)
   }
 }

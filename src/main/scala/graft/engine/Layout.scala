@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Physical-layout toolkit — the knobs that decide whether a plan
   * survives a 100× scale-up:
@@ -213,10 +214,9 @@ object Layout {
     * spreads evenly — and keyed hashing avoids the local sort a
     * round-robin repartition pays (`sortBeforeRepartition`). */
   def spreadSmall(df: DataFrame, keys: Seq[Column]): DataFrame = {
-    val sess = df.sparkSession
-    val sp = sess.conf.get("spark.sql.shuffle.partitions").toInt
-    val split = sess.conf.get("spark.sql.files.maxPartitionBytes",
-      (128L * 1024 * 1024).toString).toLong
+    val conf = Bridge.conf(df.sparkSession)
+    val sp = conf.numShufflePartitions
+    val split = conf.filesMaxPartitionBytes
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes < BigInt(sp) * split) df.repartition(sp, keys: _*) else df
   }

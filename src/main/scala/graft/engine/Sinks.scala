@@ -1,13 +1,15 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** File sinks, replacing the reference's write-side operators:
   *
   *  - chunked append (`sql.py:174-188` `insert_data`) → partition-parallel
-  *    append; the 10k-row chunk loop becomes executor tasks, one job commit
-  *    instead of a commit per chunk;
+  *    append; the 10k-row chunks become files of at most that many rows,
+  *    written by executor tasks with one job commit instead of a commit
+  *    per chunk;
   *  - truncate (`sql.py:292-302`) and full delete (`sql.py:307-317`) →
   *    overwrite with an empty frame of the same schema (both reference ops
   *    leave the table in place with zero rows — identical semantics);
@@ -16,11 +18,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Sinks {
 
-  /** Append-load (`insert_data`). `partitions` plays the role of the
-    * reference's chunk count, but writes run in parallel. */
-  def append(df: DataFrame, path: String, partitions: Int = 0): Unit = {
-    val out = if (partitions > 0) df.repartition(partitions) else df
-    out.write.mode(SaveMode.Append).parquet(path)
+  /** Append-load (`insert_data`). `maxRecordsPerFile` plays the role of
+    * the reference's chunk size: no written file holds more rows, and
+    * the files are written in parallel (0 = the session's setting). */
+  def append(df: DataFrame, path: String, maxRecordsPerFile: Int = 0): Unit = {
+    val w = df.write.mode(SaveMode.Append)
+    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
+     else w).parquet(path)
   }
 
   def overwrite(df: DataFrame, path: String): Unit =
@@ -93,9 +97,10 @@ object Sinks {
     fs.delete(backup, true)
   }
 
-  /** TRUNCATE TABLE (`sql.py:301`): table survives, rows don't. The
-    * empty frame is deliberately written WITHOUT `partitionBy`: a
-    * zero-row dynamic-partition write produces NO parquet files (the
+  /** TRUNCATE TABLE (`sql.py:301`): table survives, rows don't. `schema`
+    * is the table's, as a read of it reports it, so truncating reads no
+    * data. The empty frame is deliberately written WITHOUT `partitionBy`:
+    * a zero-row dynamic-partition write produces NO parquet files (the
     * writer opens files per row), so the swapped-in directory would
     * have no schema and the table would become permanently unreadable.
     * The non-partitioned empty write stores the full schema — partition
@@ -103,14 +108,15 @@ object Sinks {
     * columns — in a schema-bearing empty file; the `col=value/`
     * directory tree necessarily disappears with the rows (an empty
     * table has no partitions). */
-  def truncate(spark: SparkSession, path: String): Unit = {
-    val empty = spark.read.parquet(path).limit(0)
+  def truncate(spark: SparkSession, path: String, schema: StructType): Unit = {
+    val empty = spark.createDataFrame(java.util.List.of[Row](), schema)
     overwriteInPlace(spark, empty, path)
   }
 
   /** DELETE FROM without predicate (`sql.py:316`) — same visible state as
     * truncate. */
-  def deleteAll(spark: SparkSession, path: String): Unit = truncate(spark, path)
+  def deleteAll(spark: SparkSession, path: String, schema: StructType): Unit =
+    truncate(spark, path, schema)
 
   /** JDBC append — the literal parity path for `insert_data`'s
     * SQLAlchemy `to_sql(if_exists="append")` (`sql.py:182-184`) when the

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.LongType
 
 /** Text-analysis and deduplication operators for large-scale training-data
@@ -1702,7 +1703,7 @@ object TextOps {
     // pair join would hash-partition both sides on h anyway, so this
     // exchange replaces — never adds to — the join's own shuffle, and
     // the y-side reuses it (ReusedExchange) instead of re-scanning.
-    val shufflePartitions = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val shufflePartitions = Bridge.conf(s).numShufflePartitions
     val postsN = posts.repartition(shufflePartitions, col("h"))
       .join(broadcast(nh), Seq("doc_id"))
     val gtPairs = postsN.alias("x")

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.classic.{ExpressionUtils, Dataset => CDataset, SparkSession => CSparkSession}
 
 /** Column ↔ Expression / LogicalPlan ↔ DataFrame bridge for custom
@@ -19,4 +20,7 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(s.asInstanceOf[CSparkSession], plan)
+  /** The session's typed SQL settings: values parsed the way Spark
+    * parses them (`256m` byte strings included). */
+  def conf(s: SparkSession): SQLConf = s.asInstanceOf[CSparkSession].sessionState.conf
 }

@@ -7,6 +7,29 @@ import graft.engine.Layout
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
+  test("spreadSmall reads size-suffixed byte settings (256m, 1k)") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r
+      }.size
+    val df = spark.range(100000).toDF("id") // estimated at 800 000 bytes
+    try {
+      // 4 shuffle partitions × 256 MiB: the small frame is spread
+      spark.conf.set(key, "256m")
+      val spread = Layout.spreadSmall(df, Seq(col("id")))
+      assert(exchanges(spread) == 1)
+      assert(spread.count() == 100000)
+      // 4 × 1 KiB is below the frame's size: an exact no-op
+      spark.conf.set(key, "1k")
+      assert(exchanges(Layout.spreadSmall(df, Seq(col("id")))) == 0)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("bucketed tables join without a shuffle (zero Exchange in the plan)") {
     val dir = Files.createTempDirectory("graft_bkt").toString
     val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")

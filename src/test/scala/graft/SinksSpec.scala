@@ -19,7 +19,7 @@ class SinksSpec extends SparkSpec {
   test("truncate leaves an empty table with the same schema (sql.py:292-302)") {
     val p = tmp()
     Sinks.append(Seq((1, "a")).toDF("x", "s"), p)
-    Sinks.truncate(spark, p)
+    Sinks.truncate(spark, p, spark.read.parquet(p).schema)
     val df = spark.read.parquet(p)
     assert(df.count() == 0)
     assert(df.columns.toSeq == Seq("x", "s"))
@@ -29,7 +29,7 @@ class SinksSpec extends SparkSpec {
     val p = tmp()
     Seq((1, "a", "d1"), (2, "b", "d2")).toDF("x", "s", "day")
       .write.partitionBy("day").parquet(p)
-    Sinks.truncate(spark, p)
+    Sinks.truncate(spark, p, spark.read.parquet(p).schema)
     // a partitionBy'd empty write would produce NO parquet files and the
     // table would become unreadable (UNABLE_TO_INFER_SCHEMA)
     val df = spark.read.parquet(p)
@@ -43,7 +43,7 @@ class SinksSpec extends SparkSpec {
   test("deleteAll == truncate semantics (sql.py:307-317)") {
     val p = tmp()
     Sinks.append(Seq(1, 2, 3).toDF("x"), p)
-    Sinks.deleteAll(spark, p)
+    Sinks.deleteAll(spark, p, spark.read.parquet(p).schema)
     assert(spark.read.parquet(p).count() == 0)
   }
 

@@ -331,12 +331,31 @@ class StagesSpec extends SparkSpec {
 
   test("an already-healthy stage layout is not rewritten") {
     // a single-partition write is already at the ideal count — the
-    // compactor must leave it alone (same file count, one build)
+    // compactor must leave it alone: the resolved attempt keeps its one
+    // part file, same name and mtime, across reads and re-resolution
     val dir = java.nio.file.Files.createTempDirectory("spec-nocompact").toString
-    val staged = Stages.materialize(spark, "spec_nocompact", dir) {
+    def stage() = Stages.materialize(spark, "spec_nocompact", dir) {
       spark.range(100).toDF("id").coalesce(1)
     }
+    val staged = stage()
+    val rootField = Stages.getClass.getDeclaredField("root")
+    rootField.setAccessible(true)
+    val root = new java.io.File(rootField.get(Stages).asInstanceOf[String])
+    def parts() = {
+      val attempts = root.listFiles().filter(f =>
+        f.getName.startsWith("spec_nocompact-") && f.isDirectory)
+      assert(attempts.length == 1 && !attempts.head.getName.endsWith("-compact"),
+        s"expected one attempt dir, got ${attempts.map(_.getName).toSeq}")
+      attempts.head.listFiles().filter(_.getName.startsWith("part-"))
+        .map(f => (f.getName, f.lastModified())).toSeq
+    }
+    val original = parts()
+    assert(original.size == 1, s"expected 1 part file, got $original")
+    assert(staged.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSeq ==
+      original.map(_._1))
     assert(staged.count() == 100)
+    assert(stage().count() == 100)
+    assert(parts() == original, "the healthy attempt's part file was rewritten")
   }
 
   test("liveStageUnits names every unit this JVM resolved") {
