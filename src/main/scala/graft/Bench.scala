@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 object Bench {
   // JSON string escape shared with Verify's discipline: the output line
   // must survive the driver's json.load even for hostile paths
-  private def q(s: String): String = "\"" + s.flatMap {
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

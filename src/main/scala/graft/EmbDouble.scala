@@ -31,7 +31,7 @@ import graft.engine.Sessions
   *     check is exhaustive, not probabilistic).
   *
   * Output is a multi-part `<dst>/embeddings.parquet` DIRECTORY (this
-  * corpus feeds Spark-side SemProfile legs only, never the
+  * corpus feeds Spark-side runs (SpineSweep, Profile) only, never the
   * single-file DuckDB harness). Deterministic end to end.
   *
   * Usage: `sbt "runMain graft.EmbDouble <src> <dst> [copyIndex=1249]

@@ -910,7 +910,7 @@ object Registry {
       SketchRegistry.entries ++ DiagRegistry.entries
 
   /** Raw entry names BEFORE map-collapse — the duplicate-name invariant
-    * Smoke checks (a name collision across the per-module registries
+    * ContractSpec checks (a name collision across the per-module registries
     * would silently drop a query from the driver's inventory). */
   def entryNames: Seq[String] = entries.map(_._1)
 

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * reads would dominate the generation cost).
   *
   * Replication preserves the properties the queries' scale arguments
-  * rest on, using the same constant-density constructions as
-  * [[ScaleProbe]]:
+  * rest on, using constant-density constructions:
   *   - documents: per-copy AFFINE letter cipher (translate is
   *     injective — each copy keeps the base corpus's near-dup
   *     structure, copies are textually disjoint, so dup DENSITY stays

@@ -1,0 +1,71 @@
+package graft.engine
+
+import scala.collection.mutable
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.graft.Bridge
+
+/** Executor-side totals of the jobs one block launched. `spillBytes`
+  * is memory plus disk spill; `taskMs` holds each task's executor run
+  * time. */
+final case class JobTotals(jobs: Int, tasks: Int, cpuNs: Long,
+    shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
+    taskMs: IndexedSeq[Long]) {
+  def maxTaskMs: Long = if (taskMs.isEmpty) 0L else taskMs.max
+  def p50TaskMs: Long = if (taskMs.isEmpty) 0L else taskMs.sorted.apply(taskMs.size / 2)
+}
+
+/** Counts the Spark jobs a block launches and totals their tasks: a
+  * `SparkListener` sees every job start tagged with the block's own job
+  * group (broadcast and AQE stage jobs inherit it) and every task end
+  * of those jobs' stages. The listener bus is drained before the totals
+  * are read. */
+object JobCounter {
+  /** The number of jobs `body` launches. */
+  def apply(sc: SparkContext)(body: => Unit): Int = measure(sc)(body)._2.jobs
+
+  /** `body`'s result with the totals of every job it launched. */
+  def measure[A](sc: SparkContext)(body: => A): (A, JobTotals) = {
+    val listener = new GroupListener(s"job-counter-${java.util.UUID.randomUUID()}")
+    sc.addSparkListener(listener)
+    sc.setJobGroup(listener.group, "job count", interruptOnCancel = false)
+    val out = try body
+    finally {
+      sc.clearJobGroup()
+      Bridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    (out, listener.totals)
+  }
+
+  private final class GroupListener(val group: String) extends SparkListener {
+    private val stages = mutable.Set.empty[Int]
+    private val taskMs = mutable.ArrayBuffer.empty[Long]
+    private var jobs, tasks = 0
+    private var cpuNs, shuffleRead, shuffleWrite, spill = 0L
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group) {
+        jobs += 1
+        stages ++= e.stageIds
+      }
+    }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      val m = e.taskMetrics
+      if (m != null && stages(e.stageId)) {
+        tasks += 1
+        cpuNs += m.executorCpuTime
+        shuffleRead += m.shuffleReadMetrics.totalBytesRead
+        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+        spill += m.memoryBytesSpilled + m.diskBytesSpilled
+        taskMs += m.executorRunTime
+      }
+    }
+
+    def totals: JobTotals = synchronized {
+      JobTotals(jobs, tasks, cpuNs, shuffleRead, shuffleWrite, spill, taskMs.toIndexedSeq)
+    }
+  }
+}

@@ -110,9 +110,9 @@ object Similarity extends Serializable {
     * consecutive indices made every hyperplane an arithmetic progression
     * mod 2048 — hyperplanes were mutually correlated, buckets skewed ~5×
     * on isotropic data, and adding bits failed to split hot buckets
-    * (measured via ScaleProbe's embdedup leg). The mix runs in Scala at
-    * plan-build time only; the oracle SQL receives the literal weight
-    * lists, so the two engines share values by construction. */
+    * (measured on 1×/2×/4× rotated embedding replicas). The mix runs in
+    * Scala at plan-build time only; the oracle SQL receives the literal
+    * weight lists, so the two engines share values by construction. */
   def lshWeight(j: Int, i: Int): Long = {
     var x = (j * 64 + i + 1).toLong * 0x9E3779B97F4A7C15L
     x ^= (x >>> 32)
@@ -1129,9 +1129,8 @@ object Similarity extends Serializable {
         slice(col("v"), k * PqSubDim + 1, PqSubDim).as("sv"))
     }
 
-  /** The deterministic hash-ranked codebook: (code, sub, cv).
-    * (private[graft]: [[graft.PqProfile]] times the stages.) */
-  private[graft] def pqCodebookOf(vs: DataFrame): DataFrame = {
+  /** The deterministic hash-ranked codebook: (code, sub, cv). */
+  private def pqCodebookOf(vs: DataFrame): DataFrame = {
     val wCode = Window.orderBy(col("ck"), col("vec_id"))
     vs.withColumn("ck", PortableHash.h28(concat(lit("pq_"), col("vec_id"))))
       .orderBy(col("ck"), col("vec_id")).limit(PqCodebook)
@@ -1157,8 +1156,8 @@ object Similarity extends Serializable {
     * partition — which is why [[pqSearch]] needs no repartition
     * before its rollup. The declarative alternatives both materialize
     * or interpret N·128 candidates and were measured at 800k vectors
-    * (PqProfile, round 12): broadcast-join + rank-1 window sorts the
-    * 102M joined rows (37.9 s); `min(struct(d2, code))` falls out of
+    * (round-12 stage profile, SCALE.md): broadcast-join + rank-1
+    * window sorts the 102M joined rows (37.9 s); `min(struct(d2, code))` falls out of
     * the unsafe-row hash fast path (struct agg buffer ⇒ SortAggregate,
     * sorts them twice — 159 s on the search rollup); a higher-order
     * `aggregate` fold over a typedLit codebook is interpreted, not
@@ -1190,7 +1189,7 @@ object Similarity extends Serializable {
     * while `vs` is re-scanned at each execution; callers that mutate
     * the underlying table between declare and execute should rebuild
     * the frame. */
-  private[graft] def pqEncode(vs: DataFrame, codebook: DataFrame): DataFrame = {
+  private def pqEncode(vs: DataFrame, codebook: DataFrame): DataFrame = {
     val spark = vs.sparkSession
     // code-ascending (code, codeword) pairs per subspace (≤128 rows
     // total); a null-cv row keeps its CODE out of the matrix without
@@ -1320,8 +1319,8 @@ object Similarity extends Serializable {
   /** The per-query ADC lookup table: (q_id, sub, code, pd6) — query
     * subvectors × codewords, fixed-point quantized. [[NumQueries]] ×
     * [[PqSubspaces]] × [[PqCodebook]] = 2 048 rows, broadcast-sized by
-    * construction. (private[graft]: [[graft.PqProfile]] times it.) */
-  private[graft] def pqLutOf(vs: DataFrame, codebook: DataFrame): DataFrame =
+    * construction. */
+  private def pqLutOf(vs: DataFrame, codebook: DataFrame): DataFrame =
     vs.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), explode(array(pqSubIdx: _*)).as("xs"))
       .select(col("q_id"), col("xs.sub").as("sub"), col("xs.sv").as("sv"))
@@ -1592,20 +1591,15 @@ object Similarity extends Serializable {
   }
 
   /** [[semDedup]]'s pipeline over an explicit (vec_id, v, nm) frame
-    * with corpus count `n` (drives the adaptive K; `kOverride` lets
-    * [[graft.SemProfile]] reproduce the pre-two-level capped K for
-    * A/B stage attribution). */
+    * with corpus count `n` (drives the adaptive K). */
   private[graft] def semDedupOf(vs: DataFrame, n: Long,
-      threshold: Double, kOverride: Int = 0): DataFrame = {
-    val k = if (kOverride > 0) kOverride else semDedupCells(n)
-    semDedupPairs(assignCells(vs, k, nKnown = n), threshold)
-  }
+      threshold: Double): DataFrame =
+    semDedupPairs(assignCells(vs, semDedupCells(n), nKnown = n), threshold)
 
   /** The within-cell candidate half of the SemDeDup pipeline: pair
     * join on `cell`, a < b, cosine ≥ `threshold` — (cell, a, b, cos)
-    * rows. private[graft] so [[graft.SemProfile]] times the REAL
-    * stage, not a copy that could drift. */
-  private[graft] def semDedupCand(assigned: DataFrame,
+    * rows. */
+  private def semDedupCand(assigned: DataFrame,
       threshold: Double): DataFrame = {
     val x = assigned.select(col("cell"), col("vec_id").as("a"),
       col("v").as("va"), col("nm").as("na"))
@@ -1618,17 +1612,13 @@ object Similarity extends Serializable {
   }
 
   /** The keep-first rollup over [[semDedupCand]]'s pair frame —
-    * (vec_id, cell, keep_id, n_near, cos4), totally ordered. The
-    * unsorted core is split out so [[semDedupPairs]] can persist and
-    * materialize it WITHOUT the global sort: Sort plans a
-    * range-partitioning exchange whose SAMPLING pass re-executes the
-    * child, so count()-ing the sorted frame runs pairs+rollup twice —
-    * caching below the sort keeps both the sampling pass and the
-    * consumer's sort on the (dupes-sized) cache. */
-  private[graft] def semDedupRollup(cand: DataFrame): DataFrame =
-    semDedupRollupCore(cand)
-      .orderBy("vec_id", "cell", "keep_id", "n_near", "cos4")
-
+    * (vec_id, cell, keep_id, n_near, cos4), unsorted so that
+    * [[semDedupPairs]] can persist and materialize it WITHOUT the
+    * global sort: Sort plans a range-partitioning exchange whose
+    * SAMPLING pass re-executes the child, so count()-ing the sorted
+    * frame runs pairs+rollup twice — caching below the sort keeps both
+    * the sampling pass and the consumer's sort on the (dupes-sized)
+    * cache. */
   private def semDedupRollupCore(cand: DataFrame): DataFrame =
     cand
       .groupBy(col("b").as("vec_id"), col("cell"))
@@ -1663,7 +1653,7 @@ object Similarity extends Serializable {
       threshold: Double): DataFrame = {
     val assigned = assignedBy
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persist BELOW the sort (see semDedupRollup's scaladoc): Sort
+    // persist BELOW the sort (see semDedupRollupCore's scaladoc): Sort
     // plans a range-exchange whose SAMPLING pass re-executes its
     // child, so count()-ing the sorted frame without a cached core
     // would run pairs+rollup twice; the returned sort (and its

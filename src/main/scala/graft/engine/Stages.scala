@@ -206,21 +206,18 @@ object Stages {
     s.read.parquet(path)
   }
 
-  /** Target stage parquet file size (bytes). Stage writes inherit the
+  /** Target stage parquet file size: 256 MiB. Stage writes inherit the
     * build plan's output partitioning — at cluster core counts (or with
     * AQE's parallelism-first coalescing) that is MANY small files, and
     * every downstream consumer then pays per-file open/footer overhead
     * on each of its rescans while the driver pays listing time (guide
-    * §6: aim for 128 MB–1 GB output files). Overridable per deployment
-    * via `-Dgraft.stages.targetFileBytes`; the default sits at the
-    * low end of the §6 band so local runs exercise the same code path
-    * a cluster uses. */
-  private lazy val targetFileBytes: Long =
-    sys.props.get("graft.stages.targetFileBytes").map(_.toLong)
-      .getOrElse(256L * 1024 * 1024)
+    * §6: aim for 128 MB–1 GB output files). The value sits at the low
+    * end of the §6 band so local runs exercise the same code path a
+    * cluster uses. */
+  private val TargetFileBytes: Long = 256L * 1024 * 1024
 
   /** Compact a just-written attempt directory toward
-    * [[targetFileBytes]]-sized files: if the write produced more part
+    * [[TargetFileBytes]]-sized files: if the write produced more part
     * files than `ceil(bytes/target)` AND the average file is under half
     * the target, read the attempt back, `coalesce` to the ideal count,
     * and atomically swap the compacted copy in. Runs BEFORE publish, on
@@ -243,8 +240,8 @@ object Stages {
     val n = parts.length
     if (n <= 1) return
     val bytes = parts.map(_.getLen).sum
-    val ideal = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    if (n <= ideal || bytes / n >= targetFileBytes / 2) return
+    val ideal = math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)
+    if (n <= ideal || bytes / n >= TargetFileBytes / 2) return
     val tmp = new org.apache.hadoop.fs.Path(s"$attempt-compact")
     s.read.parquet(attempt.toString)
       .coalesce(ideal.toInt)
@@ -328,7 +325,13 @@ object Stages {
     * qualified paths while the pointer stores the configured-root form,
     * so a string compare of full paths would mismatch on qualification
     * alone and delete the committed output. Best-effort: failures are
-    * ignored (another reaper may have raced us). */
+    * ignored (another reaper may have raced us).
+    *
+    * A crashed [[compactAttempt]] leaves `<attempt>-compact` behind.
+    * It is reaped here only because its name is
+    * `<stage>-attempt-<id>-compact`, which starts with the same
+    * `<stage>-attempt-` prefix; renaming that swap directory must keep
+    * the prefix or extend this filter. */
   private def reapStaleAttempts(fs: org.apache.hadoop.fs.FileSystem,
       p: String, resolved: String): Unit =
     try {

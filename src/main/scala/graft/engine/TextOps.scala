@@ -1640,27 +1640,10 @@ object TextOps {
     * rebuild): the explode+distinct+df-filter pays once per corpus in
     * the warm pass, and all four posting consumers (df filter, nh,
     * both self-join sides) rescan columnar files. */
-  /** df-capped ground-truth postings `(doc_id, h)` from a shingle-set
-    * frame carrying an `hx` hash array: distinct per-doc hashes minus
-    * every hash with document frequency > [[LshPrDfCap]]. The shared
-    * building block of [[lshPrecisionRecall]] and the ScaleProbe leg
-    * that measures its linearity. */
-  def cappedPosts(sets: DataFrame): DataFrame = {
-    val rawPosts = sets
-      .select(col("doc_id"), explode(col("hx")).as("h")).distinct()
-    val keep = rawPosts.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= LshPrDfCap).select(col("h"))
-    // O(docs·shingles) rows read by four consumers (df filter, nh, both
-    // self-join sides) — persist so the explode+distinct runs once
-    // (harness clearCache() releases it per query). The DECLARED query
-    // path reads [[sharedCappedPosts]] instead (parquet-staged, no
-    // persist); this direct form serves ad-hoc frames (ScaleProbe).
-    rawPosts.join(keep, Seq("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** [[cappedPosts]] of the shared shingle stage, parquet-materialized
-    * ([[Stages]]): the postings are deterministic per corpus, so the
+  /** df-capped ground-truth postings `(doc_id, h)` of the shared
+    * shingle stage: distinct per-doc hashes minus every hash with
+    * document frequency > [[LshPrDfCap]], parquet-materialized
+    * ([[Stages]]). The postings are deterministic per corpus, so the
     * explode+distinct+df-filter pays once per corpus (disclosed in the
     * bench's stages_sec) and the four downstream reads become columnar
     * rescans — the same checkpoint-beside-the-corpus shape as the
@@ -1977,9 +1960,8 @@ object TextOps {
     // tokenize+zip+explode+aggregate (two full Generate+agg pipelines
     // in the measured runtime plan; exchange reuse did not fire). The
     // cached frame is bigram-VOCABULARY-sized, not corpus-sized; the
-    // harness clearCache() releases it per query (library callers: the
-    // cappedPosts note applies — clearCache/session end is the release
-    // path). No SortOrder lives below the persist, so the registry's
+    // harness clearCache() releases it per query (library callers:
+    // clearCache/session end is the release path). No SortOrder lives below the persist, so the registry's
     // portableOrder rewrite cannot defeat the cache lookup (the
     // rankedCum lesson).
     val bc = corpus(s, d)
@@ -2477,12 +2459,6 @@ object TextOps {
       .select(col("doc_id"), explode(zipGrams2(col("toks"))).as("p"))
       .groupBy(col("doc_id"), h28(gram2(col("p"))).as("bgh"))
       .agg(count(lit(1)).as("lc"))
-
-  /** Frame-level [[ngramNovelty]] over any (doc_id, text) frame — the
-    * single pipeline definition the query and ScaleProbe's linearity leg
-    * share (unstaged: ScaleProbe measures the whole pipeline). */
-  def ngramNoveltyOf(docs: DataFrame): DataFrame =
-    ngramNoveltyFromGrams(docGramCounts(docs))
 
   /** Novelty report from a [[docGramCounts]]-shaped frame. */
   def ngramNoveltyFromGrams(grams: DataFrame): DataFrame = {

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -23,4 +24,7 @@ object Bridge {
   /** The session's typed SQL settings: values parsed the way Spark
     * parses them (`256m` byte strings included). */
   def conf(s: SparkSession): SQLConf = s.asInstanceOf[CSparkSession].sessionState.conf
+  /** Block until every event posted so far has reached the listeners
+    * (the bus is `private[spark]`), so a listener's totals are final. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

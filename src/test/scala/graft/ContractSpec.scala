@@ -26,6 +26,11 @@ class ContractSpec extends SparkSpec {
     val o = Registry.oracleSql.keySet
     assert((q diff o).isEmpty, s"queries without oracle: ${q diff o}")
     assert((o diff q).isEmpty, s"oracles without query: ${o diff q}")
+    // both maps collapse duplicate names: a name declared in two
+    // per-module registries would silently drop one query
+    val names = Registry.entryNames
+    assert(names.distinct.size == names.size,
+      s"duplicate query names: ${names.diff(names.distinct).distinct}")
   }
 
   /** The q_pack_seqs lesson (round 3's one red row): a final ORDER BY

@@ -1,13 +1,12 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.api.FlowEngine
-import graft.engine.{ProgressReporter, Types}
+import graft.engine.{JobCounter, ProgressReporter, Types}
 
 class FlowEngineSpec extends SparkSpec {
   import spark.implicits._

@@ -1,0 +1,49 @@
+package graft
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
+/** [[Profile]] prints one parseable JSON record per query and rep whose
+  * counters come from the query's own jobs and whose plan is the final
+  * adaptive one. */
+class ProfileSpec extends SparkSpec {
+
+  private lazy val records: Map[String, JsonNode] = {
+    val lines = Seq.newBuilder[String]
+    Profile.profile(spark, sf, Seq("q_scan_project", "q_heaps_law", "q_no_such_query"),
+      reps = 1)(lines += _)
+    val mapper = new ObjectMapper()
+    lines.result().map { l =>
+      val node = mapper.readTree(l)
+      assert(node != null && node.isObject, s"not a JSON object: $l")
+      node.get("query").asText -> node
+    }.toMap
+  }
+
+  test("every profiled query reports its jobs, tasks, CPU and scans") {
+    for (q <- Seq("q_scan_project", "q_heaps_law")) {
+      val r = records(q)
+      assert(!r.has("error"), s"$q failed: ${r.get("error")}")
+      assert(r.get("rep").asInt == 1)
+      assert(r.get("jobs").asInt >= 1, s"$q: ${r.get("jobs")} jobs")
+      assert(r.get("tasks").asInt >= 1, s"$q: ${r.get("tasks")} tasks")
+      assert(r.get("scans").asInt >= 1, s"$q: ${r.get("scans")} scans")
+      assert(r.get("cpu_s").asDouble > 0, s"$q: cpu_s ${r.get("cpu_s")}")
+      assert(r.get("plan").asText.contains("isFinalPlan=true"),
+        s"$q: plan is not the final adaptive plan")
+      assert(r.get("plan_hash").asText.length == 16)
+    }
+  }
+
+  test("cache_scan is true only where the final plan reads a cached frame") {
+    // q_heaps_law's rankedCum persists its ranked frame; q_scan_project
+    // reads parquet only
+    assert(records("q_heaps_law").get("cache_scan").asBoolean)
+    assert(!records("q_scan_project").get("cache_scan").asBoolean)
+  }
+
+  test("an unknown query yields an error record, not a crash") {
+    val r = records("q_no_such_query")
+    assert(r.has("error") && r.get("rep").asInt == 1)
+    assert(!r.has("jobs"))
+  }
+}

@@ -358,6 +358,38 @@ class StagesSpec extends SparkSpec {
     assert(parts() == original, "the healthy attempt's part file was rewritten")
   }
 
+  test("a stale -compact dir from a crashed compaction is reaped on resolve") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val dir = java.nio.file.Files.createTempDirectory("spec-reap-compact").toString
+    def stage() = Stages.materialize(spark, "spec_reap_compact", dir) {
+      spark.range(6).toDF("id")
+    }
+    assert(stage().count() == 6)
+    val rootField = Stages.getClass.getDeclaredField("root")
+    rootField.setAccessible(true)
+    val root = new java.io.File(rootField.get(Stages).asInstanceOf[String])
+    val attempts = root.listFiles().filter(f =>
+      f.getName.startsWith("spec_reap_compact-") && f.isDirectory)
+    assert(attempts.length == 1)
+    val attempt = attempts.head
+    def parts() = attempt.listFiles().filter(_.getName.startsWith("part-"))
+      .map(f => (f.getName, f.lastModified())).toSeq.sorted
+    val original = parts()
+    // the swap dir a compaction of another attempt left when it died:
+    // <stage>-attempt-<id>-compact, older than the reap horizon
+    val unit = attempt.getName.substring(0, attempt.getName.lastIndexOf("-attempt-"))
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val debris = new Path(root.getPath, s"$unit-attempt-0badc0de-compact")
+    fs.mkdirs(debris)
+    fs.create(new Path(debris, "part-00000.parquet")).close()
+    fs.setTimes(debris, System.currentTimeMillis() - 10L * 24 * 3600 * 1000, -1)
+    Stages.reset()
+    assert(stage().count() == 6)
+    assert(!fs.exists(debris), "stale -compact dir survived the resolve")
+    assert(attempt.isDirectory && parts() == original,
+      "the resolved attempt was touched")
+  }
+
   test("liveStageUnits names every unit this JVM resolved") {
     Stages.materialize(spark, "spec_live_units", "/tmp/spec-in") {
       spark.range(2).toDF("id")
