@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import graft.engine.{JobCounter, Sessions, Warm}
@@ -23,9 +27,9 @@ import graft.engine.{JobCounter, Sessions, Warm}
   *   - `jobs`, `tasks`, `cpu_s`, `shuffle_read_bytes`,
   *     `shuffle_write_bytes`, `spill_bytes`, `task_ms_max`, `task_ms_p50`:
   *     totals over every job of the rep, construction included;
-  *   - `scans`: parquet scans in the final plan; `cache_scan`: whether it
-  *     reads a cached frame; `plan_hash`: a hash of the final plan with
-  *     expression and stage ids masked, equal across runs of one plan.
+  *   - `scans`: file scan nodes in the final plan; `cache_reads`: its
+  *     reads of cached frames ([[cacheReads]], summed); `plan_hash`: a
+  *     hash of the final plan, ids masked, equal across runs of one plan.
   * The last rep also carries the final plan text as `plan`. A query that
   * throws prints `{"query", "rep", "error"}` and the run goes on.
   *
@@ -78,14 +82,14 @@ object Profile {
       val phases = qe.tracker.phases
       def phase(p: String): String =
         phases.get(p).map(ps => seconds(ps.durationMs * 1000000L)).getOrElse("0")
-      val plan = qe.executedPlan.toString
       (Seq(
         "construct_s" -> seconds(t1 - t0),
         "analysis_s" -> phase(QueryPlanningTracker.ANALYSIS),
         "optimization_s" -> phase(QueryPlanningTracker.OPTIMIZATION),
         "planning_s" -> phase(QueryPlanningTracker.PLANNING),
-        "execute_s" -> seconds(t3 - t2)), plan)
+        "execute_s" -> seconds(t3 - t2)), qe.executedPlan)
     }
+    val text = plan.toString
     val rest = Seq(
       "jobs" -> totals.jobs.toString,
       "tasks" -> totals.tasks.toString,
@@ -95,12 +99,25 @@ object Profile {
       "spill_bytes" -> totals.spillBytes.toString,
       "task_ms_max" -> totals.maxTaskMs.toString,
       "task_ms_p50" -> totals.p50TaskMs.toString,
-      "scans" -> "Scan parquet".r.findAllIn(plan).size.toString,
-      "cache_scan" ->
-        (plan.contains("InMemoryTableScan") || plan.contains("TableCacheQueryStage")).toString,
-      "plan_hash" -> Bench.q(planHash(plan))) ++
-      (if (withPlan) Seq("plan" -> Bench.q(plan)) else Nil)
+      "scans" -> Plans.collectWithSubqueries(plan) { case f: FileSourceScanExec => f }.size.toString,
+      "cache_reads" -> cacheReads(plan).sum.toString,
+      "plan_hash" -> Bench.q(planHash(text))) ++
+      (if (withPlan) Seq("plan" -> Bench.q(text)) else Nil)
     (fields ++ rest).map { case (k, v) => s""""$k":$v""" }.mkString(",")
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Reads of each cached relation in `plan`: InMemoryTableScanExec
+    * nodes per `CachedRDDBuilder`, through adaptive stages and
+    * subqueries, plus the reads inside each read cached plan, once. */
+  private[graft] def cacheReads(plan: SparkPlan): Seq[Int] = {
+    val reads = new java.util.IdentityHashMap[AnyRef, Int]()
+    def walk(p: SparkPlan): Unit =
+      Plans.collectWithSubqueries(p) { case s: InMemoryTableScanExec => s.relation }
+        .foreach(r => if (reads.merge(r.cacheBuilder, 1, _ + _) == 1) walk(r.cachedPlan))
+    walk(plan)
+    reads.values.asScala.toSeq
   }
 
   /** Seconds with microsecond resolution, as a JSON number. */

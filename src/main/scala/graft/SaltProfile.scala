@@ -105,7 +105,7 @@ object SaltProfile {
       .withColumn("v", v)
       .withColumn("nm", Similarity.l2norm(col("v")))
       .filter(col("nm") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // the count + every leg
     val nReal = vs.count()
     println(s"[salt] n=$nReal k=$k coarse=${Similarity.coarseFor(k)} " +
       s"hotPct=$hotPct mode=$mode advisoryKB=$advisoryKB parts=$parts")

@@ -114,7 +114,7 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
     Try {
       val df = Types.normalizeDecimals(Types.coerce(spark.sql(query), spec))
       progress.foreach { cb =>
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // count, then the caller
         // a failing counted query must not leak a pinned cache entry on
         // a long-lived session — unpersist before surfacing the error
         try ProgressReporter.withProgress(spark)(cb)(df.count())

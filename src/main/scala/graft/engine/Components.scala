@@ -47,85 +47,91 @@ object Components {
         s"connectedComponents requires integral node ids; " +
           s"column ${f.name} is ${f.dataType.sql}")
     }
-    // both edge directions from ONE pass over pairs (a union of two
-    // projections would execute the upstream pair pipeline twice)
-    val sym0 = pairs.select(explode(array(
-        struct(col("a").as("id"), col("b").as("nb")),
-        struct(col("b").as("id"), col("a").as("nb")))).as("e"))
-      .select(col("e.id").as("id"), col("e.nb").as("nb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // The loop's frames are edge-list-sized, far smaller than the session
-    // default shuffle width assumes — and persist() blocks AQE's
-    // partition coalescing, so every tiny round would otherwise run
-    // full-width stages of near-empty tasks. Size the shuffles to the
-    // measured edge count (the count also materializes the cache) with
-    // EXPLICIT per-frame repartitioning on the join/agg keys: the edge
-    // table is hash-clustered on `nb` once, every label frame on `id`,
-    // and alias-aware output partitioning lets each round's join and agg
-    // reuse them — no exchange at session width, and no toggling of the
-    // session-global spark.sql.shuffle.partitions (which would leak into
-    // any query running concurrently on the same session).
-    // One pass materializes the cache, sizes the shuffles AND rejects
-    // null node ids: the inner join on `nb` silently drops null-keyed
-    // rows, so a null id would absorb neighbors' labels without ever
-    // propagating back — components joined only through a null would
-    // quietly stay unmerged (this module refuses, never returns partial
-    // labels). The type guard above cannot catch nulls.
-    val firstPass = sym0.agg(count(lit(1)).as("n"),
-      coalesce(sum(when(col("id").isNull || col("nb").isNull, 1L)
-        .otherwise(0L)), lit(0L)).as("nulls")).head()
-    require(firstPass.getLong(1) == 0L,
-      s"connectedComponents: ${firstPass.getLong(1)} edge endpoints are " +
-        "null — null ids break min-label propagation; filter or map them first")
-    val nEdges = firstPass.getLong(0)
-    val parts = math.max(1L, math.min(10000L, nEdges / 100000L + 1)).toInt
-    // Self-loops fold the "keep my own label" term into the neighbor
-    // minimum, so each round is ONE co-partitioned join + agg — the
-    // previous shape needed a second (left) join back onto the old
-    // labels, roughly doubling per-round stages.
-    val nodes = sym0.select(col("id")).distinct()
-    val sym = sym0.unionByName(nodes.withColumn("nb", col("id")))
-      .repartition(parts, col("nb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.repartition(parts, col("id"))
-      .withColumn("component", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Labels only ever decrease, so the label sum decreases strictly
-    // every non-converged round: convergence check = one scalar agg on
-    // the round's materialization, no prev-vs-next join. Exact decimal
-    // sum — a long could wrap at extreme id×node scales.
-    def labelSum(df: DataFrame): BigDecimal = {
-      val v = df.agg(sum(col("component").cast("decimal(38,0)")))
-        .head().getDecimal(0)
-      if (v == null) BigDecimal(0) else BigDecimal(v)
-    }
-    var prevSum: Option[BigDecimal] = None
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val next = sym
-        .join(labels.select(col("id").as("nb"), col("component")), Seq("nb"))
-        .select(col("id"), col("component"))
-        .repartition(parts, col("id"))
-        .groupBy("id").agg(min(col("component")).as("component"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val s = labelSum(next)
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      labels.unpersist()
-      labels = next
-      i += 1
-    }
-    sym0.unpersist()
-    sym.unpersist()
-    if (!converged) {
-      labels.unpersist()
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"(a component's diameter exceeds the cap); partial labels " +
-          s"would be silently wrong — raise maxIter")
-    }
-    labels
+    // every cache below but the returned labels is released on EVERY exit
+    // path: the null-id and non-convergence rejections throw after caching
+    val held = scala.collection.mutable.ListBuffer[DataFrame]()
+    try {
+      // both edge directions from ONE pass over pairs (a union of two
+      // projections would execute the upstream pair pipeline twice)
+      val sym0 = pairs.select(explode(array(
+          struct(col("a").as("id"), col("b").as("nb")),
+          struct(col("b").as("id"), col("a").as("nb")))).as("e"))
+        .select(col("e.id").as("id"), col("e.nb").as("nb"))
+        .persist(StorageLevel.MEMORY_AND_DISK) // read by the first pass, nodes and sym
+      held += sym0
+      // The loop's frames are edge-list-sized, far smaller than the session
+      // default shuffle width assumes — and persist() blocks AQE's
+      // partition coalescing, so every tiny round would otherwise run
+      // full-width stages of near-empty tasks. Size the shuffles to the
+      // measured edge count (the count also materializes the cache) with
+      // EXPLICIT per-frame repartitioning on the join/agg keys: the edge
+      // table is hash-clustered on `nb` once, every label frame on `id`,
+      // and alias-aware output partitioning lets each round's join and agg
+      // reuse them — no exchange at session width, and no toggling of the
+      // session-global spark.sql.shuffle.partitions (which would leak into
+      // any query running concurrently on the same session).
+      // One pass materializes the cache, sizes the shuffles AND rejects
+      // null node ids: the inner join on `nb` silently drops null-keyed
+      // rows, so a null id would absorb neighbors' labels without ever
+      // propagating back — components joined only through a null would
+      // quietly stay unmerged (this module refuses, never returns partial
+      // labels). The type guard above cannot catch nulls.
+      val firstPass = sym0.agg(count(lit(1)).as("n"),
+        coalesce(sum(when(col("id").isNull || col("nb").isNull, 1L)
+          .otherwise(0L)), lit(0L)).as("nulls")).head()
+      require(firstPass.getLong(1) == 0L,
+        s"connectedComponents: ${firstPass.getLong(1)} edge endpoints are " +
+          "null — null ids break min-label propagation; filter or map them first")
+      val nEdges = firstPass.getLong(0)
+      val parts = math.max(1L, math.min(10000L, nEdges / 100000L + 1)).toInt
+      // Self-loops fold the "keep my own label" term into the neighbor
+      // minimum, so each round is ONE co-partitioned join + agg — the
+      // previous shape needed a second (left) join back onto the old
+      // labels, roughly doubling per-round stages.
+      val nodes = sym0.select(col("id")).distinct()
+      val sym = sym0.unionByName(nodes.withColumn("nb", col("id")))
+        .repartition(parts, col("nb"))
+        .persist(StorageLevel.MEMORY_AND_DISK) // the loop: every round joins onto it
+      held += sym
+      var labels = nodes.repartition(parts, col("id"))
+        .withColumn("component", col("id"))
+        .persist(StorageLevel.MEMORY_AND_DISK) // the loop: round 1 reads it
+      held += labels
+      // Labels only ever decrease, so the label sum decreases strictly
+      // every non-converged round: convergence check = one scalar agg on
+      // the round's materialization, no prev-vs-next join. Exact decimal
+      // sum — a long could wrap at extreme id×node scales.
+      def labelSum(df: DataFrame): BigDecimal = {
+        val v = df.agg(sum(col("component").cast("decimal(38,0)")))
+          .head().getDecimal(0)
+        if (v == null) BigDecimal(0) else BigDecimal(v)
+      }
+      var prevSum: Option[BigDecimal] = None
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIter) {
+        val next = sym
+          .join(labels.select(col("id").as("nb"), col("component")), Seq("nb"))
+          .select(col("id"), col("component"))
+          .repartition(parts, col("id"))
+          .groupBy("id").agg(min(col("component")).as("component"))
+          .persist(StorageLevel.MEMORY_AND_DISK) // the loop: labelSum + next round
+        held += next
+        val s = labelSum(next)
+        converged = prevSum.contains(s)
+        prevSum = Some(s)
+        labels.unpersist()
+        labels = next
+        i += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds " +
+            s"(a component's diameter exceeds the cap); partial labels " +
+            s"would be silently wrong — raise maxIter")
+      held -= labels
+      labels
+    } finally held.foreach(_.unpersist())
   }
 
   /** Fixed-point damping constants for [[pagerank]]: damping 0.85 as the
@@ -148,19 +154,14 @@ object Components {
     * destination — co-partitioned on the node id, edge-list-sized
     * shuffles, nothing driver-side. Scores are ppm BIGINTs:
     * `pr' = PrBase + Σ_in (pr(u)·17) div (20·deg(u))` with floor
-    * division, deterministic on both engines. At 100 TB the loop wants
-    * the edge list persisted and the score frame checkpointed every few
-    * rounds (lineage growth), exactly as [[connectedComponents]] does —
-    * `iters` here is small and the frames are pair-stage-sized, so a
-    * plain loop suffices. */
+    * division, deterministic on both engines. Nothing is cached: the
+    * rounds share the edge-list and degree stages by exchange reuse. */
   def pagerank(pairs: DataFrame, iters: Int = 3): DataFrame = {
     val sym = pairs.select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val adj = sym.join(deg, Seq("src")) // (src, dst, deg of src)
     var pr = deg.select(col("src").as("node"), lit(PrScale).as("pr"))
     for (_ <- 1 to iters) {
@@ -171,12 +172,6 @@ object Components {
       // every node of the symmetric graph has deg ≥ 1 inbound, so the
       // sum never needs an outer join / coalesce
     }
-    // sym/deg stay persisted: the returned plan re-reads them once per
-    // iteration, and an eager unpersist here would force `iters` full
-    // recomputes of the edge pipeline at materialization time. Callers
-    // drop them via unpersist/clearCache when done (the
-    // [[connectedComponents]] cache-courtesy contract; Verify/Bench
-    // clear between queries).
     deg.select(col("src").as("node"), col("deg"))
       .join(pr, Seq("node"))
       .select(col("node"), col("deg"), col("pr"))
@@ -212,7 +207,7 @@ object Components {
     * carry n_tri 0, coefficient 0. */
   def triangles(pairs: DataFrame): DataFrame = {
     val ed = pairs.select(col("a"), col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK) // read 4×: wedge sides, semi probe, deg
     val wedges = ed.select(col("a").as("x"), col("b").as("y"))
       .join(ed.select(col("a").as("y"), col("b").as("z")), Seq("y"))
     val tri = wedges.join(
@@ -225,7 +220,7 @@ object Components {
       .groupBy("node").agg(count(lit(1)).as("deg"))
     // ed stays persisted (read by wedges ×2, the semi probe and deg) —
     // callers unpersist / clearCache when done (the cache-courtesy
-    // contract shared with connectedComponents and pagerank).
+    // contract shared with connectedComponents).
     deg.join(corners, Seq("node"), "left")
       .select(col("node"), col("deg"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"))

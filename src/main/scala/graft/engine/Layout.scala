@@ -347,7 +347,7 @@ object Layout {
     val ranged = Registry0.portableOrder(
         df.repartitionByRange(parts, sortExprs: _*)
           .withColumn("__pid", spark_partition_id()))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // one sampling, 2 readers
     val wl = Window.partitionBy(col("__pid")).orderBy(sortExprs: _*)
     val local = ranged
       .withColumn("__lr", row_number().over(wl).cast("long"))

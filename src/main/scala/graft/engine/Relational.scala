@@ -160,11 +160,7 @@ object Relational {
     * correct on an EMPTY one: SQL's () grouping set yields one row over
     * zero input (DuckDB/the standard do; Spark's Expand-based rollup
     * yields none — the sf0 fuzz class caught the divergence), and the
-    * derived global aggregate always produces its row.
-    *
-    * Cache courtesy: the grouping-set frame is persisted (CacheManager
-    * never auto-drops plans) — the harnesses clearCache() per query; a
-    * long-lived session should clearCache()/unpersist between calls. */
+    * derived global aggregate always produces its row. */
   def aggRollup(s: SparkSession, d: String): DataFrame = {
     val sets = ord(s, d)
       .join(cust(s, d), col("o_custkey") === col("c_custkey"))
@@ -177,11 +173,6 @@ object Relational {
         count(lit(1)).as("n"),
         grouping(col("r_name")).cast("int").as("g_r"),
         grouping(col("n_name")).cast("int").as("g_n"))
-      // dimension-bounded (|regions|·|nations| + |regions| rows) and
-      // read by two union branches: persist so the fact scan + Expand
-      // subtree provably runs once, whatever AQE stage-reuse decides
-      // (harness clearCache() releases it per query)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val grand = sets.filter(col("g_n") === 1)
       .agg(sum(col("dec_total")).as("dec_total"),
         coalesce(sum(col("n")), lit(0L)).as("n"))
@@ -267,8 +258,7 @@ object Relational {
     * status-level rows, the [[aggRollup]] construction: value-identical
     * to `.cube(...)` on non-empty input, and emits the standard's one
     * () row over an empty one (which Spark's Expand-based cube drops —
-    * the sf0 fuzz class). Cache courtesy as in [[aggRollup]]: the
-    * grouping-set frame stays persisted until clearCache()/unpersist. */
+    * the sf0 fuzz class). */
   def aggCube(s: SparkSession, d: String): DataFrame = {
     val sets = ord(s, d)
       .groupingSets(
@@ -279,9 +269,6 @@ object Relational {
         count(lit(1)).as("n"),
         grouping(col("o_orderstatus")).cast("int").as("g_s"),
         grouping(col("o_orderpriority")).cast("int").as("g_p"))
-      // bounded (|statuses|·|priorities| grid) two-consumer frame —
-      // persist for the same single-execution guarantee as aggRollup
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val grand = sets.filter(col("g_s") === 0 && col("g_p") === 1)
       .agg(sum(col("dec_total")).as("dec_total"),
         coalesce(sum(col("n")), lit(0L)).as("n"))

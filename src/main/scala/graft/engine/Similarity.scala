@@ -700,13 +700,13 @@ object Similarity extends Serializable {
   def kmeansIterate(s: SparkSession, d: String, iters: Int): Seq[Double] = {
     import s.implicits._
     val vs = vectors(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // the loop reads it per round
     try {
       var cents = centroidsFixed(vs)
       val quality = Seq.newBuilder[Double]
       for (round <- 1 to iters) {
         val assigned = assignTo(vs, cents)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // quality agg + means
         try {
           quality += assigned.agg(avg(col("c_cos"))).head().getDouble(0)
           if (round < iters) {
@@ -1652,7 +1652,7 @@ object Similarity extends Serializable {
   private def semDedupPairs(assignedBy: DataFrame,
       threshold: Double): DataFrame = {
     val assigned = assignedBy
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // both cell-join sides
     // persist BELOW the sort (see semDedupRollupCore's scaladoc): Sort
     // plans a range-exchange whose SAMPLING pass re-executes its
     // child, so count()-ing the sorted frame without a cached core

@@ -319,9 +319,9 @@ object TextOps {
   def jaccardPairs(docs: DataFrame, threshold: Double,
       hash: Column => Column = fast28): DataFrame = {
     val sets = shingleSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // sig + both pair joins
     val sig = minhashSignatureFromSets(sets, hash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // both band-join sides
     jaccardPairsFrom(sets, sig, threshold)
   }
 

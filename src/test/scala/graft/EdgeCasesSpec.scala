@@ -14,6 +14,16 @@ class EdgeCasesSpec extends SparkSpec {
     assert(Components.connectedComponents(empty).count() == 0)
   }
 
+  test("connectedComponents rejects a null endpoint and leaves no cache behind") {
+    spark.catalog.clearCache()
+    val pairs = Seq((1L, Some(2L)), (2L, None)).toDF("a", "b")
+    intercept[IllegalArgumentException] {
+      Components.connectedComponents(pairs)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the rejected call left a cached frame pinned")
+  }
+
   test("jaccardPairs on sub-shingle docs is empty, not a crash") {
     val docs = Seq((1L, "a b"), (2L, "x"), (3L, "")).toDF("doc_id", "text")
     assert(TextOps.jaccardPairs(docs, 0.8).count() == 0)

@@ -231,9 +231,12 @@ class TextOpsSpec extends SparkSpec {
   test("connectedComponents throws rather than return non-converged labels") {
     // a 6-node chain has diameter 5 — maxIter=2 cannot reach fixpoint
     val chain = (0L until 5L).map(i => (i, i + 1)).toDF("a", "b")
+    spark.catalog.clearCache()
     intercept[IllegalStateException] {
       graft.engine.Components.connectedComponents(chain, maxIter = 2)
     }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the non-converged call left a cached frame pinned")
     // and the same chain converges (single component 0) without a cap hit
     val ok = graft.engine.Components.connectedComponents(chain)
       .collect().map(r => r.getLong(1)).toSet
