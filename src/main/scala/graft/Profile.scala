@@ -24,6 +24,7 @@ import graft.engine.{JobCounter, Sessions, Warm}
   *     `QueryPlanningTracker` phases;
   *   - `execute_s`: the frame's own executed plan run to completion, so
   *     the reported plan is the final adaptive one (`isFinalPlan=true`);
+  *   - `rows`: the rows that run produced, the query's output row count;
   *   - `jobs`, `tasks`, `cpu_s`, `shuffle_read_bytes`,
   *     `shuffle_write_bytes`, `spill_bytes`, `task_ms_max`, `task_ms_p50`:
   *     totals over every job of the rep, construction included;
@@ -77,7 +78,7 @@ object Profile {
       val qe = df.queryExecution
       qe.executedPlan
       val t2 = System.nanoTime()
-      qe.executedPlan.execute().count()
+      val rows = qe.executedPlan.execute().count()
       val t3 = System.nanoTime()
       val phases = qe.tracker.phases
       def phase(p: String): String =
@@ -87,7 +88,8 @@ object Profile {
         "analysis_s" -> phase(QueryPlanningTracker.ANALYSIS),
         "optimization_s" -> phase(QueryPlanningTracker.OPTIMIZATION),
         "planning_s" -> phase(QueryPlanningTracker.PLANNING),
-        "execute_s" -> seconds(t3 - t2)), qe.executedPlan)
+        "execute_s" -> seconds(t3 - t2),
+        "rows" -> rows.toString), qe.executedPlan)
     }
     val text = plan.toString
     val rest = Seq(

@@ -924,5 +924,5 @@ object Registry {
 
   def oracleSql: Map[String, String] =
     scala.collection.immutable.ListMap(
-      entries.collect { case (n, Entry(_, Some(sql))) => n -> sql }: _*)
+      entries.map { case (n, en) => n -> en.oracle }: _*)
 }

@@ -106,7 +106,10 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
     * When `progress` is set the frame must execute once to drive the
     * callback, so it is persisted first — the caller's subsequent action
     * reads the cache instead of re-running the query (unpersist when
-    * done). */
+    * done). The callback gets the cumulative rows and bytes this count
+    * has read after each task that read rows (the reference reports
+    * after each fetched chunk, `sql.py:146-156`), and every call has
+    * been made when `getData` returns. */
   def getData(
       query: String,
       spec: Types.CoercionSpec = Types.CoercionSpec(),
@@ -115,9 +118,12 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
       val df = Types.normalizeDecimals(Types.coerce(spark.sql(query), spec))
       progress.foreach { cb =>
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // count, then the caller
-        // a failing counted query must not leak a pinned cache entry on
+        // counted through the executed plan, which fills the cache in the
+        // same pass; `df.count()` would fill it in one job, then read the
+        // cached batches back in another, each batch one more input record.
+        // A failing counted query must not leak a pinned cache entry on
         // a long-lived session — unpersist before surfacing the error
-        try ProgressReporter.withProgress(spark)(cb)(df.count())
+        try JobCounter.measure(spark.sparkContext, cb)(df.queryExecution.toRdd.count())
         catch { case e: Throwable => df.unpersist(); throw e }
       }
       df

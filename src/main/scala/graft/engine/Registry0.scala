@@ -333,7 +333,7 @@ object Registry0 {
 
   final case class Entry(
       fn: (SparkSession, String) => DataFrame,
-      oracle: Option[String])
+      oracle: String)
 
   // portableDoubleOut runs FIRST, on the RAW oracle text: the injected
   // doc/vec/dim CTEs are shared constants whose one scalar float→double
@@ -343,8 +343,7 @@ object Registry0 {
   // arguments, which is all the raw oracle strings contain.
   def e(fn: (SparkSession, String) => DataFrame, sql: String): Entry =
     Entry((s, d) => portableOrder(fn(s, d)),
-      Some(canonDims(canonVecs(canonDocs(portableCasts(
-        portableDoubleOut(sql)))))))
+      canonDims(canonVecs(canonDocs(portableCasts(portableDoubleOut(sql))))))
 
   /** Entry whose oracle reads the RAW dimension tables — for audits
     * that measure exactly what the canonical views repair (injecting
@@ -353,9 +352,5 @@ object Registry0 {
   def eRawDims(fn: (SparkSession, String) => DataFrame,
       sql: String): Entry =
     Entry((s, d) => portableOrder(fn(s, d)),
-      Some(canonVecs(canonDocs(portableCasts(portableDoubleOut(sql))))))
-
-  /** Entry with no SQL-expressible oracle (driver records rows-only). */
-  def noOracle(fn: (SparkSession, String) => DataFrame): Entry =
-    Entry((s, d) => portableOrder(fn(s, d)), None)
+      canonVecs(canonDocs(portableCasts(portableDoubleOut(sql)))))
 }

@@ -1569,8 +1569,7 @@ object Similarity extends Serializable {
     * 33.5M ≈ 1.6× the measured sf1 cost, at any corpus size. Every
     * driver gate SF and the committed sf1 leg sit BELOW the cap, so
     * their declared semantics (and hashes) are unchanged; the Spark
-    * library operator [[semDedup]] has no cap — the scale sweeps time
-    * it full-corpus ([[graft.SpineSweep.FullCorpus]]). */
+    * library operator [[semDedup]] has no cap. */
   val SemDedupGateCap = 32768L
 
   /** The DECLARED q_semdedup: [[semDedup]] over the whole corpus up to

@@ -125,19 +125,6 @@ object TextOps {
   def gram2(p: Column): Column =
     concat(p.getField("0"), lit(" "), p.getField("1"))
 
-  /** [[zipGrams2]]'s trigram sibling — the explode-side twin of
-    * [[shingles3]]. */
-  def zipGrams3(toks: Column): Column = {
-    val m = greatest(size(toks) - 2, lit(0))
-    arrays_zip(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      slice(toks, lit(3), m))
-  }
-
-  /** Re-joins a [[zipGrams3]] struct to the trigram string. */
-  def gram3(p: Column): Column =
-    concat(p.getField("0"), lit(" "), p.getField("1"),
-      lit(" "), p.getField("2"))
-
   /** doc_id → its shingle array — NOT distinct ([[shingles3]]'s doc):
     * occurrence-weighted by construction; consumers are either
     * duplicate-insensitive (min, array_intersect/union) or deliberately

@@ -33,6 +33,22 @@ class ContractSpec extends SparkSpec {
       s"duplicate query names: ${names.diff(names.distinct).distinct}")
   }
 
+  test("the only mains are Bench, Verify, Profile, ScaleGen, StageGc") {
+    // keeps the one-off probe mains from growing back: profile declared
+    // queries with Profile over ScaleGen copies instead
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no sources under ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    // one entry per `def main(`, named by its file (one object per main file)
+    val mains = files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      val src = java.nio.file.Files.readString(f.toPath)
+      Seq.fill("""def main\(""".r.findAllMatchIn(src).size)(f.getName.stripSuffix(".scala"))
+    }
+    assert(mains.sorted == Seq("Bench", "Profile", "ScaleGen", "StageGc", "Verify"),
+      s"mains: ${mains.sorted}")
+  }
+
   /** The q_pack_seqs lesson (round 3's one red row): a final ORDER BY
     * whose keys can tie across rows that differ elsewhere lets the two
     * engines emit different row orders — the driver hashes rows in

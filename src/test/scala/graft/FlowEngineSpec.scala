@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.api.FlowEngine
-import graft.engine.{JobCounter, ProgressReporter, Types}
+import graft.engine.{JobCounter, Types}
 
 class FlowEngineSpec extends SparkSpec {
   import spark.implicits._
@@ -180,12 +180,32 @@ class FlowEngineSpec extends SparkSpec {
   }
 
   test("progress reporter observes rows and bytes read (sql.py:146-156)") {
-    var calls = 0L
-    val (_, rows, bytes) = ProgressReporter.withProgress(spark) { (r, b) =>
-      calls += 1
-    } {
-      spark.read.parquet(s"$sf/lineitem.parquet").count()
-    }
-    assert(rows >= 6000 && bytes > 0 && calls > 0)
+    val eng = new FlowEngine(spark, sf)
+    eng.connect()
+    var calls, rows, bytes = 0L
+    val df = eng.getData("SELECT * FROM lineitem", progress = Some { (r, b) =>
+      calls += 1; rows = r; bytes = b
+    }).get
+    try {
+      assert(rows >= 6000 && bytes > 0 && calls > 0)
+      // the callback counts this extract's own tasks, and only them
+      assert(rows == 6000, s"last progress report: $rows rows")
+    } finally { df.unpersist(); eng.disconnect() }
+  }
+
+  test("a progress extract that reads no rows returns at once and reports 0 rows") {
+    val (eng, _) = freshWarehouse()
+    eng.connect()
+    // one untimed progress extract first: the timed one is steady state
+    eng.getData("SELECT k FROM items", progress = Some((_, _) => ())).get.unpersist()
+    eng.truncateTable("items")
+    var rows = 0L
+    val t0 = System.nanoTime()
+    val df = eng.getData("SELECT k FROM items", progress = Some((r, _) => rows = r)).get
+    val sec = (System.nanoTime() - t0) / 1e9
+    try {
+      assert(sec < 3.0, s"an empty progress extract took $sec s")
+      assert(rows == 0L && df.count() == 0L)
+    } finally { df.unpersist(); eng.disconnect() }
   }
 }

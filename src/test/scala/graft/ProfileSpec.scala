@@ -48,6 +48,11 @@ class ProfileSpec extends SparkSpec {
     assert(records("q_scan_project").get("scans").asInt == 1)
   }
 
+  test("rows is the query's output row count") {
+    val want = SparkEntry.queries("q_scan_project")(spark, sf).count()
+    assert(records("q_scan_project").get("rows").asLong == want)
+  }
+
   test("an unknown query yields an error record, not a crash") {
     val r = records("q_no_such_query")
     assert(r.has("error") && r.get("rep").asInt == 1)

@@ -40,42 +40,4 @@ class ScaleGenSpec extends AnyFunSuite {
     // copy 0 is the identity transform
     assert(pairs.head === ((0, Seq.fill(64)(1f))))
   }
-
-  test("EmbDouble's copy indices 1249/1250 are distinct from every ScaleGen copy") {
-    // EmbDouble doubles a replica corpus with copy index 1249 (and a
-    // second doubling with 1250) — outside ScaleGen's 0..1247 space.
-    // Index 1249 shares rotation r = 33 with ~19 existing copies, so
-    // its freshness rests entirely on the sign-vector: prove the
-    // (rotation, signs) PAIRS collide with none of the 1248
-    // in-envelope pairs (the r14 advisor flagged this claim as
-    // unproven; now it is the same exhaustive check as the bound).
-    val pairs = ((0 until ScaleGen.MaxDocCopies) ++ Seq(1249, 1250))
-      .map(i => (i % 64, ScaleGen.signsOf(i)))
-    assert(pairs.distinct.size === ScaleGen.MaxDocCopies + 2,
-      "an EmbDouble copy's (rotation, signs) pair collides in-envelope")
-  }
-
-  test("chained EmbDouble: all four composed transform families are pairwise distinct") {
-    // a quadrupled corpus (EmbDouble 1249 then 1250) carries four
-    // transform families over the base embeddings — {T_i} and
-    // {T1249∘T_i} from the first doubling, then T1250 applied to both
-    // halves: {T1250∘T_i} and {T1250∘T1249∘T_i}.
-    // The transforms form a group: T=(r,s) acts as
-    // y[j] = s[j]·x[(j+r) mod 64], and (T_b∘T_a) = ((r_a+r_b) mod 64,
-    // j ↦ s_b[j]·s_a[(j+r_b) mod 64]) — closed, so distinctness of the
-    // 4·1248 composed maps is an EXHAUSTIVE check, not a probability
-    // argument (the constant-density claim of the ~10M leg rests on no
-    // two rows of different families sharing a map).
-    def compose(b: (Int, Seq[Float]), a: (Int, Seq[Float])): (Int, Seq[Float]) =
-      (((a._1 + b._1) % 64,
-        (0 until 64).map(j => b._2(j) * a._2((j + b._1) % 64))))
-    def t(i: Int): (Int, Seq[Float]) = (i % 64, ScaleGen.signsOf(i))
-    val base = (0 until ScaleGen.MaxDocCopies).map(t)
-    val all = base ++
-      base.map(compose(t(1249), _)) ++
-      base.map(compose(t(1250), _)) ++
-      base.map(a => compose(t(1250), compose(t(1249), a)))
-    assert(all.distinct.size === 4 * ScaleGen.MaxDocCopies,
-      "two composed EmbDouble transform maps coincide")
-  }
 }
