@@ -57,16 +57,20 @@ object Profile {
   }
 
   /** Profile `names` over `dir`, `reps` times each, handing every JSON
-    * line to `emit`. The cache is cleared after each rep, as in Bench. */
+    * line to `emit`. The cache is cleared before each rep, so no rep
+    * reads a frame the caller or an earlier rep left persisted, and once
+    * more at the end, as in Bench. */
   def profile(spark: SparkSession, dir: String, names: Seq[String], reps: Int)(
-      emit: String => Unit): Unit =
+      emit: String => Unit): Unit = {
     for (name <- names; rep <- 1 to reps) {
+      spark.catalog.clearCache()
       val head = s""""query":${Bench.q(name)},"rep":$rep"""
       try emit(s"{$head,${one(spark, dir, name, withPlan = rep == reps)}}")
       catch { case NonFatal(e) =>
         emit(s"""{$head,"error":${Bench.q(String.valueOf(e.getMessage))}}""") }
-      finally spark.catalog.clearCache()
     }
+    spark.catalog.clearCache()
+  }
 
   /** The JSON fields (no braces) of one profiled run of `name`. */
   private def one(spark: SparkSession, dir: String, name: String,

@@ -3,10 +3,12 @@ package graft.api
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.types._
 import graft.engine._
 
 /** User-facing facade with the reference's exact operator surface — a
@@ -30,6 +32,18 @@ import graft.engine._
   *
   * Error contract preserved: extraction logs and returns None instead of
   * raising (`sql.py:166-171`); mutations validate inputs.
+  *
+  * File-granular contract: a conditional delete or a keyed update
+  * rewrites only the files that can hold a row it changes, found from
+  * the parquet footers ([[graft.engine.Sinks.candidateFiles]]); every
+  * other file keeps its bytes, name and mtime, and a mutation that can
+  * change no file writes nothing. The swap keeps a file an outside
+  * writer appended while the rewrite ran, and a rewrite a crash cut
+  * short is completed or dropped before the engine next reads the table
+  * ([[graft.engine.Sinks.recover]]). A table holding more files than
+  * `spark.sql.shuffle.partitions` is rewritten whole, which packs its
+  * files into at most about that many, so appends between file-granular
+  * rewrites cannot grow the file count without bound.
   *
   * Known-schema contract: a table's schema is inferred from its parquet
   * footers once — at `connect()` or on the engine's first touch of the
@@ -55,13 +69,21 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
 
   private def tablePath(table: String): String = s"$warehouse/$table.parquet"
 
+  /** The table's path, after completing or dropping a rewrite a crash
+    * cut short ([[Sinks.recover]]): every read of a table goes through
+    * here. */
+  private def recovered(table: String): String = {
+    Sinks.recover(spark, tablePath(table))
+    tablePath(table)
+  }
+
   /** The table's kept schema, inferred from its footers on first touch. */
   private def schemaOf(table: String): StructType =
-    schemas.getOrElseUpdate(table, spark.read.parquet(tablePath(table)).schema)
+    schemas.getOrElseUpdate(table, spark.read.parquet(recovered(table)).schema)
 
   /** The table's current files, read with the kept schema. */
   private def read(table: String): DataFrame =
-    spark.read.schema(schemaOf(table)).parquet(tablePath(table))
+    spark.read.schema(schemaOf(table)).parquet(recovered(table))
 
   /** "Open the connection": register every `<table>.parquet` under the
     * warehouse as a temp view so `getData` can run arbitrary SQL against
@@ -70,11 +92,12 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
   def connect(): Try[Seq[String]] = Try {
     val root = new Path(warehouse)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a table a crash left mid-swap has only its `.pre_rewrite` backup
     val tables = fs.listStatus(root).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .map(_.stripSuffix(".parquet")).sorted
+      .map(_.getPath.getName.stripSuffix(".pre_rewrite")).filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).distinct.sorted
     tables.foreach { t =>
-      val df = spark.read.parquet(tablePath(t))
+      val df = spark.read.parquet(recovered(t))
       schemas(t) = df.schema
       df.createOrReplaceTempView(t)
       registered += t
@@ -154,7 +177,7 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
     * names and types (order and nullability aside); appending to a
     * missing table creates it with the records' schema. */
   def insertData(table: String, records: DataFrame, chunkRows: Int = 10000): Unit = {
-    val path = tablePath(table)
+    val path = recovered(table)
     if (!schemas.contains(table) && !exists(path)) schemas(table) = records.schema
     val known = schemaOf(table)
     val got = records.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -176,7 +199,11 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
     * UPDATE loop becomes one join + rewrite. Accepts in-memory records
     * like the reference's `list[dict]`; they become a local relation,
     * which the planner can size, so a small update set is broadcast
-    * instead of shuffling the table. */
+    * instead of shuffling the table. Only the files whose first key
+    * column can fall between the records' least and greatest non-null
+    * value (found on the driver, in Spark's order) are rewritten; a key of a type whose
+    * range test could miss a join match (floating point, or a type other
+    * than the table's) makes every file a candidate. */
   def updateData(table: String, records: Seq[Row], keys: Seq[String]): Unit = {
     require(records.nonEmpty, "update records must be non-empty")
     require(records.head.schema != null,
@@ -186,14 +213,33 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
     val updates = spark.createDataFrame(records.asJava, records.head.schema)
     require(keys.forall(updates.columns.contains),
       s"keys ${keys.mkString(",")} must be present in update records")
-    rewrite(table)(Mutations.applyUpdates(_, updates, keys))
+    rewrite(table, keyRange(table, records, keys.head))(
+      Mutations.applyUpdates(_, updates, keys))
+  }
+
+  /** `k` between the least and greatest non-null value the records hold
+    * (false when every one is null: a null key joins nothing), or None
+    * when a range test is unsafe for `k`'s type. */
+  private def keyRange(table: String, records: Seq[Row], k: String): Option[Column] = {
+    val t = records.head.schema(k).dataType
+    val ranged = (t.isInstanceOf[DecimalType] || Set[DataType](ByteType, ShortType,
+      IntegerType, LongType, StringType, DateType, TimestampType)(t)) &&
+      schemaOf(table).find(_.name == k).exists(_.dataType == t)
+    val ks = records.map(r => r.get(r.fieldIndex(k))).filter(_ != null)
+    if (!ranged) None
+    else if (ks.isEmpty) Some(lit(false))
+    else {
+      // Spark's own order of the type (strings by UTF-8 bytes, not UTF-16)
+      val ord = TypeUtils.getInterpretedOrdering(t).on[Any](Literal.create(_, t).value)
+      Some(col(k).between(lit(ks.min(ord)), lit(ks.max(ord))))
+    }
   }
 
   /** Set-oriented merge from another table (`update_from_table`,
     * `sql.py:253-289`; first updates column list = all non-key source
     * columns, mirroring `sql.py:271`'s "first column is the key"). */
   def updateFromTable(table: String, source: DataFrame, keys: Seq[String]): Unit =
-    rewrite(table)(Mutations.applyUpdates(_, source, keys))
+    rewrite(table, None)(Mutations.applyUpdates(_, source, keys))
 
   def truncateTable(table: String): Unit = {
     Sinks.truncate(spark, tablePath(table), schemaOf(table))
@@ -206,14 +252,28 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
   }
 
   /** Conditional delete (`sql.py:321-332`): predicate string parsed by
-    * Catalyst, rows matching it removed. */
+    * Catalyst, rows matching it removed; only the files whose footers
+    * admit a matching row are rewritten, and a file left with no row is
+    * removed. */
   def deleteDataWithConditions(table: String, conditions: String): Unit =
-    rewrite(table)(Mutations.deleteWhere(_, conditions))
+    rewrite(table, Some(expr(conditions)))(Mutations.deleteWhere(_, conditions))
 
-  /** Replace the table with `f` of its current rows. */
-  private def rewrite(table: String)(f: DataFrame => DataFrame): Unit = {
-    Sinks.overwriteInPlace(spark, f(read(table)), tablePath(table))
-    refreshTable(table)
+  /** Replace the files that can hold a row matching `where` (every file
+    * for None) with `f` of their rows, leaving every other file as it
+    * is; all of them when the table holds more than
+    * `spark.sql.shuffle.partitions` files. No candidate file: no job, no
+    * write. */
+  private def rewrite(table: String, where: Option[Column])(f: DataFrame => DataFrame): Unit = {
+    val current = read(table)
+    val (all, hit) = Sinks.candidateFiles(current, where)
+    val files = if (all.size > spark.conf.get("spark.sql.shuffle.partitions").toInt) all else hit
+    if (files.nonEmpty) {
+      // `current` has listed exactly `all` already
+      val rows = if (files.size == all.size) current
+        else spark.read.schema(schemaOf(table)).parquet(files.map(_.toString): _*)
+      Sinks.overwriteInPlace(spark, f(rows), tablePath(table), files = Some(files))
+      refreshTable(table)
+    }
   }
 }
 

@@ -7,11 +7,11 @@ import org.apache.spark.sql.graft.Bridge
 
 /** Executor-side totals of the jobs one block launched. `spillBytes`
   * is memory plus disk spill; `inputRecords`/`inputBytes` are what the
-  * tasks read from their sources; `taskMs` holds each task's executor
-  * run time. */
+  * tasks read from their sources; `outputBytes` is what they wrote to
+  * files; `taskMs` holds each task's executor run time. */
 final case class JobTotals(jobs: Int, tasks: Int, cpuNs: Long,
     shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
-    inputRecords: Long, inputBytes: Long, taskMs: IndexedSeq[Long]) {
+    inputRecords: Long, inputBytes: Long, outputBytes: Long, taskMs: IndexedSeq[Long]) {
   def maxTaskMs: Long = if (taskMs.isEmpty) 0L else taskMs.max
   def p50TaskMs: Long = if (taskMs.isEmpty) 0L else taskMs.sorted.apply(taskMs.size / 2)
 }
@@ -54,7 +54,7 @@ object JobCounter {
     private val stages = mutable.Set.empty[Int]
     private val taskMs = mutable.ArrayBuffer.empty[Long]
     private var jobs, tasks = 0
-    private var cpuNs, shuffleRead, shuffleWrite, spill, inRecords, inBytes = 0L
+    private var cpuNs, shuffleRead, shuffleWrite, spill, inRecords, inBytes, outBytes = 0L
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       if (e.properties != null &&
@@ -74,6 +74,7 @@ object JobCounter {
         spill += m.memoryBytesSpilled + m.diskBytesSpilled
         inRecords += m.inputMetrics.recordsRead
         inBytes += m.inputMetrics.bytesRead
+        outBytes += m.outputMetrics.bytesWritten
         taskMs += m.executorRunTime
         if (m.inputMetrics.recordsRead > 0) onInput(inRecords, inBytes)
       }
@@ -81,7 +82,7 @@ object JobCounter {
 
     def totals: JobTotals = synchronized {
       JobTotals(jobs, tasks, cpuNs, shuffleRead, shuffleWrite, spill, inRecords, inBytes,
-        taskMs.toIndexedSeq)
+        outBytes, taskMs.toIndexedSeq)
     }
   }
 }

@@ -169,7 +169,13 @@ object Mutations {
     * evaluates NULL (nullable columns) are KEPT, so the kept-set filter
     * is `NOT coalesce(pred, false)`; a plain `!pred` would silently
     * delete the NULL rows too. Catalyst parses the predicate (`expr`),
-    * so filters still push down to the scan. */
+    * so filters still push down to the scan.
+    *
+    * `FlowEngine.deleteDataWithConditions` applies this to the rows of
+    * only the files whose footer statistics admit a row where `pred` is
+    * TRUE ([[Sinks.candidateFiles]]) and swaps the result in for exactly
+    * those files ([[Sinks.overwriteInPlace]]); a file the delete empties
+    * is removed, and the other files are not touched. */
   def deleteWhere(table: DataFrame, conditions: String): DataFrame =
     table.filter(!coalesce(expr(conditions), lit(false)))
 }

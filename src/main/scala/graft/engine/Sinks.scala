@@ -1,7 +1,21 @@
 package graft.engine
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 /** File sinks, replacing the reference's write-side operators:
@@ -13,8 +27,10 @@ import org.apache.spark.sql.types.StructType
   *  - truncate (`sql.py:292-302`) and full delete (`sql.py:307-317`) →
   *    overwrite with an empty frame of the same schema (both reference ops
   *    leave the table in place with zero rows — identical semantics);
-  *  - conditional delete (`sql.py:321-332`) → anti-filter + rewrite,
-  *    see [[Mutations.deleteWhere]] for the dataflow half.
+  *  - conditional delete (`sql.py:321-332`) → anti-filter + rewrite of
+  *    only the files that can hold a matching row ([[candidateFiles]],
+  *    [[overwriteInPlace]]); see [[Mutations.deleteWhere]] for the
+  *    dataflow half.
   */
 object Sinks {
 
@@ -48,54 +64,190 @@ object Sinks {
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
       .json(path)
 
-  /** Overwrite a table with a frame derived from that same table: Spark
-    * forbids reading and overwriting one location in a single job, so
-    * stage to a sibling temp dir, then swap via filesystem rename.
+  /** Replace the files `files` of the table at `path` with the rows of
+    * `df` (copy-on-write, file-granular): every other file of the table
+    * keeps its bytes, name and mtime. `files` defaults to every file the
+    * table holds when the call starts, the whole-table rewrite. `df` is
+    * normally derived from exactly those files; Spark forbids reading
+    * and overwriting one location in a single job, so the new rows are
+    * staged in a sibling dir and swapped in by renames.
     * `partitionBy` preserves a Hive-partitioned (`col=value/`) layout.
     *
-    * The swap goes through a backup rename with every FS result checked
-    * — `fs.delete`/`fs.rename` report failure by RETURNING FALSE, not by
-    * throwing, so the naive delete-then-rename sequence could delete the
-    * table, fail the rename (cross-volume tmp, permissions, concurrent
-    * writer), and return "success" with the data stranded in the temp
-    * dir. A crash mid-swap leaves either the original or the backup on
-    * disk — never nothing. */
+    * The swap, every FS result checked (`fs.delete`/`fs.rename` report
+    * failure by RETURNING FALSE, not by throwing):
+    *  1. write the new rows to `<path>.tmp_rewrite`, then remove its
+    *     zero-row files, unless the table would otherwise have no file
+    *     (one then stays as the schema carrier, as truncate's does);
+    *  2. write the replaced files' list there as `_rewrite_touched`
+    *     (readers skip `_` files);
+    *  3. rename the target to `<path>.pre_rewrite`;
+    *  4. move every file of that backup the list does not name into
+    *     tmp, so a file an outside writer appended after the table was
+    *     listed survives the rewrite;
+    *  5. rename tmp to the target, then delete the list and the backup.
+    * [[recover]] runs first: a crash anywhere leaves either the target
+    * whole or a state the next call completes. */
   def overwriteInPlace(spark: SparkSession, df: DataFrame, path: String,
-      partitionBy: Seq[String] = Nil): Unit = {
+      partitionBy: Seq[String] = Nil, files: Option[Seq[Path]] = None): Unit = {
     val target = new Path(path)
-    val tmp = new Path(path + ".tmp_rewrite")
-    val backup = new Path(path + ".pre_rewrite")
+    val (tmp, backup) = (sibling(target, Staged), sibling(target, Backup))
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recover(fs, target)
+    val replaced = files.fold(dataFiles(fs, target))(_.map(relative(fs, target, _))).toSet
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tmp.toString)
-    if (fs.exists(backup)) {
-      // a backup with NO live target means a previous run's restore
-      // failed and the backup holds the only copy — deleting it as
-      // "stale" would be permanent data loss; refuse loudly instead
-      if (!fs.exists(target))
-        throw new java.io.IOException(
-          s"$backup exists but $target does not — a previous rewrite's " +
-            s"restore failed; move $backup back to $target before retrying")
-      if (!fs.delete(backup, true))
-        throw new java.io.IOException(s"could not remove stale backup $backup")
-    }
+    val (empty, full) = dataFiles(fs, tmp).partition(rel => rowCount(fs, new Path(tmp, rel)) == 0)
+    val keepsNone = full.isEmpty && dataFiles(fs, target).forall(replaced)
+    (if (keepsNone) empty.drop(1) else empty).foreach(rel =>
+      if (!fs.delete(new Path(tmp, rel), false))
+        throw new java.io.IOException(s"could not remove zero-row file $rel from $tmp"))
+    val list = fs.create(new Path(tmp, Touched), true)
+    try list.write(replaced.toSeq.sorted.mkString("\n").getBytes(UTF_8)) finally list.close()
     if (fs.exists(target) && !fs.rename(target, backup))
       throw new java.io.IOException(s"could not move $target aside to $backup")
-    if (!fs.rename(tmp, target)) {
-      // rename reports failure by returning false — an UNCHECKED restore
-      // could leave the table missing while claiming the original is
-      // intact (and the sole copy stranded in the backup)
-      if (!fs.rename(backup, target))
-        throw new java.io.IOException(
-          s"could not move rewritten $tmp into $target AND restoring " +
-            s"$backup failed — data is preserved at $backup; restore it " +
-            "manually before retrying")
-      throw new java.io.IOException(
-        s"could not move rewritten $tmp into $target (original restored)")
-    }
-    fs.delete(backup, true)
+    finish(fs, target)
   }
+
+  /** Bring the table at `path` to a whole state after a rewrite that
+    * did not finish ([[overwriteInPlace]]'s steps):
+    *  - backup, no target, and a tmp that holds the list (a crash in
+    *    steps 3–5): roll forward, finishing steps 4–5;
+    *  - backup, no target, no list: refuse — the backup may hold the
+    *    only copy;
+    *  - backup and target (a crash after step 5's rename): the target is
+    *    the post-image; drop the list and the backup;
+    *  - tmp without a backup (a crash before step 3): the target is the
+    *    pre-image; drop tmp. */
+  def recover(spark: SparkSession, path: String): Unit = {
+    val target = new Path(path)
+    recover(target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
+  }
+
+  /** The files `table` (one plain parquet table read) lists, and those
+    * of them that can hold a row matching `where` (every one for None).
+    * Planning only, no Spark job: each file's footer row-group
+    * statistics are tested against the pushed data filters of the scan
+    * of `table.filter(where)` with parquet's `RowGroupFilter`, the
+    * conservative test the reader uses to skip row groups, so a file
+    * with a matching row is never left out. With no pushed filter, or a
+    * Hive-partitioned table, every file can; a filter the optimizer
+    * folds to false leaves no scan and no file. */
+  def candidateFiles(table: DataFrame, where: Option[Column]): (Seq[Path], Seq[Path]) = {
+    val relation = table.queryExecution.analyzed
+      .collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r }
+      .getOrElse(throw new IllegalArgumentException("not a file table read"))
+    val all = relation.location.listFiles(Nil, Nil).flatMap(_.files).map(_.getPath)
+    val hit = where.filter(_ => relation.partitionSchema.isEmpty).fold(all) { w =>
+      table.filter(w).queryExecution.sparkPlan
+        .collectFirst { case s: FileSourceScanExec => Bridge.pushedFilters(s) }
+        .fold(Seq.empty[Path])(fs => if (fs.isEmpty) all else all.filter(mayMatch(table, fs)))
+    }
+    (all, hit)
+  }
+
+  /** Whether a row group of `file` can hold a row passing `filters`. */
+  private def mayMatch(table: DataFrame, filters: Seq[Filter])(file: Path): Boolean = {
+    val conf = Bridge.conf(table.sparkSession)
+    val meta = footer(table.sparkSession.sparkContext.hadoopConfiguration, file)
+    val schema = meta.getFileMetaData.getSchema
+    val kv = meta.getFileMetaData.getKeyValueMetaData
+    val pf = new ParquetFilters(schema, conf.parquetFilterPushDownDate,
+      conf.parquetFilterPushDownTimestamp, conf.parquetFilterPushDownDecimal,
+      conf.parquetFilterPushDownStringPredicate,
+      conf.parquetFilterPushDownInFilterThreshold, conf.caseSensitiveAnalysis,
+      DataSourceUtils.datetimeRebaseSpec(kv.get(_),
+        conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString))
+    filters.flatMap(pf.createFilter).reduceOption(FilterApi.and).forall(p =>
+      !RowGroupFilter.filterRowGroups(FilterCompat.get(p), meta.getBlocks, schema).isEmpty)
+  }
+
+  private def recover(fs: FileSystem, target: Path): Unit = {
+    val (tmp, backup) = (sibling(target, Staged), sibling(target, Backup))
+    val listed = fs.exists(new Path(tmp, Touched))
+    if (fs.exists(backup)) {
+      if (!fs.exists(target)) {
+        if (listed) finish(fs, target)
+        // a backup with NO live target and no list means a restore failed
+        // and the backup holds the only copy — deleting it as "stale"
+        // would be permanent data loss; refuse loudly instead
+        else throw new java.io.IOException(
+          s"$backup exists but $target does not — a previous rewrite's " +
+            s"restore failed; move $backup back to $target before retrying")
+      } else if (listed)
+        throw new java.io.IOException(
+          s"$target was re-created while a rewrite was swapping it in; the " +
+            s"table's rows are split between $backup and $tmp — merge them by hand")
+      else {
+        fs.delete(new Path(target, Touched), false)
+        if (!fs.delete(backup, true))
+          throw new java.io.IOException(s"could not remove stale backup $backup")
+      }
+    }
+    if (fs.exists(tmp) && !fs.delete(tmp, true))
+      throw new java.io.IOException(s"could not remove stale $tmp")
+  }
+
+  /** Steps 4–5 of the swap: the backup's unlisted files join tmp, tmp
+    * becomes the target. A failure leaves a state [[recover]] completes. */
+  private def finish(fs: FileSystem, target: Path): Unit = {
+    val (tmp, backup) = (sibling(target, Staged), sibling(target, Backup))
+    if (fs.exists(backup)) {
+      val in = fs.open(new Path(tmp, Touched))
+      val listed = try new String(in.readAllBytes(), UTF_8).split('\n').toSet finally in.close()
+      for (rel <- dataFiles(fs, backup) if !listed(rel)) {
+        val to = new Path(tmp, rel)
+        if (!fs.mkdirs(to.getParent) || !fs.rename(new Path(backup, rel), to))
+          throw new java.io.IOException(
+            s"could not move untouched $rel from $backup into $tmp; the next " +
+              "rewrite or read of the table completes the swap")
+      }
+    }
+    if (!fs.rename(tmp, target))
+      throw new java.io.IOException(
+        s"could not move rewritten $tmp into $target; the next rewrite or " +
+          "read of the table completes the swap")
+    fs.delete(new Path(target, Touched), false)
+    if (!fs.delete(backup, true) && fs.exists(backup))
+      throw new java.io.IOException(s"could not remove backup $backup")
+  }
+
+  private val Staged = ".tmp_rewrite"
+  private val Backup = ".pre_rewrite"
+  /** The replaced files' list in a staged rewrite, one relative path a line. */
+  private val Touched = "_rewrite_touched"
+
+  private def sibling(target: Path, suffix: String): Path =
+    new Path(target.getParent, target.getName + suffix)
+
+  /** Paths, relative to `root`, of the files a parquet read of `root`
+    * sees: no path component hidden (`.x`, or `_x` without `=`), as in
+    * Spark's file index. (`listStatus`, not `listFiles`: the located
+    * statuses cost a permission lookup per file on a local disk.) */
+  private def dataFiles(fs: FileSystem, root: Path): Seq[String] = {
+    def hidden(n: String) = n.startsWith(".") || n.startsWith("_") && !n.contains("=")
+    def walk(dir: Path, prefix: String): Seq[String] =
+      fs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
+        val rel = prefix + s.getPath.getName
+        if (s.isDirectory) walk(s.getPath, rel + "/") else Seq(rel)
+      }
+    if (fs.exists(root)) walk(root, "") else Nil
+  }
+
+  private def relative(fs: FileSystem, root: Path, file: Path): String = {
+    val base = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    val p = fs.makeQualified(file).toUri.getPath
+    require(p.startsWith(base), s"$file is not a file of $root")
+    p.stripPrefix(base)
+  }
+
+  private def footer(conf: Configuration, file: Path): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, conf),
+      ParquetMetadataConverter.NO_FILTER)
+
+  private def rowCount(fs: FileSystem, file: Path): Long =
+    footer(fs.getConf, file).getBlocks.asScala.map(_.getRowCount).sum
 
   /** TRUNCATE TABLE (`sql.py:301`): table survives, rows don't. `schema`
     * is the table's, as a read of it reports it, so truncating reads no

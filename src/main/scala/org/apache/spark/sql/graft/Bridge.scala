@@ -4,7 +4,10 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.classic.{ExpressionUtils, Dataset => CDataset, SparkSession => CSparkSession}
 
 /** Column ↔ Expression / LogicalPlan ↔ DataFrame bridge for custom
@@ -24,6 +27,11 @@ object Bridge {
   /** The session's typed SQL settings: values parsed the way Spark
     * parses them (`256m` byte strings included). */
   def conf(s: SparkSession): SQLConf = s.asInstanceOf[CSparkSession].sessionState.conf
+  /** A file scan's data filters as the data-source filters it pushes to
+    * its reader (`pushedDownFilters` itself is protected). */
+  def pushedFilters(scan: FileSourceScanExec): Seq[Filter] =
+    scan.dataFilters.flatMap(DataSourceStrategy.translateFilter(_,
+      DataSourceUtils.supportNestedPredicatePushdown(scan.relation)))
   /** Block until every event posted so far has reached the listeners
     * (the bus is `private[spark]`), so a listener's totals are final. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

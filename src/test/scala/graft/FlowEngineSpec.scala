@@ -208,4 +208,142 @@ class FlowEngineSpec extends SparkSpec {
       assert(rows == 0L && df.count() == 0L)
     } finally { df.unpersist(); eng.disconnect() }
   }
+
+  // ---- file-granular rewrites: only the files that can hold a changed row
+
+  /** A warehouse whose table `t` (k, name, v) has three files, holding
+    * keys [0, 100), [100, 200) and [200, 300); the engine is connected,
+    * so the table's schema is already kept. Returns the engine, the
+    * warehouse and the files' names in key order. */
+  private def threeFileWarehouse(): (FlowEngine, String, Seq[String]) = {
+    val dir = Files.createTempDirectory("graft_wh3").toString
+    val names = (0 until 3).map { i =>
+      val before = stamps(dir, "t").keySet
+      spark.range(100L * i, 100L * (i + 1), 1, 1)
+        .select($"id".as("k"), concat(lit("n"), $"id").as("name"), ($"id" * 1.5).as("v"))
+        .write.mode("append").parquet(s"$dir/t.parquet")
+      (stamps(dir, "t").keySet -- before).head
+    }
+    val eng = new FlowEngine(spark, dir)
+    eng.connect()
+    (eng, dir, names)
+  }
+
+  /** Name -> (mtime, size) of each part file of `table`. */
+  private def stamps(dir: String, table: String): Map[String, (Long, Long)] =
+    if (!new java.io.File(s"$dir/$table.parquet").isDirectory) Map.empty
+    else partFiles(dir, table).map(f => f.getName -> ((f.lastModified, f.length))).toMap
+
+  private def keysOf(dir: String, table: String): Seq[Long] =
+    spark.read.parquet(s"$dir/$table.parquet").select("k").as[Long].collect().toSeq.sorted
+
+  test("a delete inside one of three files leaves the other two untouched") {
+    val (eng, dir, Seq(f0, f1, f2)) = threeFileWarehouse()
+    val before = stamps(dir, "t")
+    val (_, used) = JobCounter.measure(spark.sparkContext)(
+      eng.deleteDataWithConditions("t", "k >= 120 AND k < 130"))
+    val after = stamps(dir, "t")
+    assert(after(f0) == before(f0) && after(f2) == before(f2))
+    assert(after.size == 3 && !after.contains(f1))
+    assert(keysOf(dir, "t") == (0L until 120L) ++ (130L until 300L))
+    assert(used.jobs <= 1, s"${used.jobs} jobs")
+    assert(used.outputBytes > 0 && used.outputBytes < before(f0)._2 + before(f1)._2,
+      s"${used.outputBytes} bytes written to delete from one file of ${before(f1)._2} bytes")
+  }
+
+  test("a delete that empties a file removes it and writes no zero-row file") {
+    val (eng, dir, Seq(_, f1, _)) = threeFileWarehouse()
+    val before = stamps(dir, "t")
+    eng.deleteDataWithConditions("t", "k >= 100 AND k < 200")
+    assert(stamps(dir, "t") == before - f1)
+    assert(keysOf(dir, "t") == (0L until 100L) ++ (200L until 300L))
+  }
+
+  test("a delete that matches no file runs no job and changes no file") {
+    val (eng, dir, _) = threeFileWarehouse()
+    val before = stamps(dir, "t")
+    val (_, used) = JobCounter.measure(spark.sparkContext)(
+      eng.deleteDataWithConditions("t", "k >= 1000"))
+    assert(used.jobs == 0 && used.outputBytes == 0, used)
+    assert(stamps(dir, "t") == before)
+    assert(keysOf(dir, "t").size == 300)
+  }
+
+  test("a delete keeps the rows whose predicate column is NULL") {
+    val dir = Files.createTempDirectory("graft_whn").toString
+    val path = s"$dir/t.parquet"
+    Seq[(Long, Option[Double])]((1L, None), (2L, Some(5.0)), (3L, Some(50.0)))
+      .toDF("k", "v").coalesce(1).write.parquet(path)
+    Seq[(Long, Option[Double])]((4L, None), (5L, None))
+      .toDF("k", "v").coalesce(1).write.mode("append").parquet(path)
+    val allNull = partFiles(dir, "t").map(_.getName)
+      .find(n => spark.read.parquet(s"$path/$n").filter($"k" === 4).count() == 1).get
+    val eng = new FlowEngine(spark, dir)
+    eng.connect()
+    val before = stamps(dir, "t")
+    eng.deleteDataWithConditions("t", "v > 10")
+    assert(keysOf(dir, "t") == Seq(1L, 2L, 4L, 5L))
+    // a file whose v is NULL in every row can hold no match: untouched
+    assert(stamps(dir, "t").get(allNull) == before.get(allNull))
+  }
+
+  test("updateData rewrites only the files its key range can reach") {
+    val (eng, dir, Seq(f0, f1, f2)) = threeFileWarehouse()
+    val before = stamps(dir, "t")
+    val (_, used) = JobCounter.measure(spark.sparkContext)(
+      eng.updateData("t", updateRows(Seq(120L, 150L), "U"), Seq("k")))
+    val after = stamps(dir, "t")
+    assert(after(f0) == before(f0) && after(f2) == before(f2) && !after.contains(f1))
+    assert(used.outputBytes < before(f0)._2 + before(f1)._2, s"${used.outputBytes} bytes")
+    val out = spark.read.parquet(s"$dir/t.parquet")
+    assert(out.count() == 300L)
+    assert(out.filter($"name" === "U").select("k").as[Long].collect().sorted.toSeq ==
+      Seq(120L, 150L))
+  }
+
+  test("20 rounds of insert, update and delete keep the file count bounded, no zero-row file") {
+    val (eng, dir, _) = threeFileWarehouse()
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val want = scala.collection.mutable.Map((0L until 300L).map(k => k -> s"n$k"): _*)
+    for (i <- 0 until 20) {
+      val k0 = 1000L + 50 * i
+      val fresh = (k0 until k0 + 50).map(k => (k, s"n$k", k.toDouble))
+      eng.insertData("t", fresh.toDF("k", "name", "v"))
+      fresh.foreach { case (k, n, _) => want(k) = n }
+      eng.updateData("t", updateRows(Seq(k0 + 7, 3L * i), s"u$i"), Seq("k"))
+      Seq(k0 + 7, 3L * i).foreach(want(_) = s"u$i")
+      eng.deleteDataWithConditions("t", s"k >= ${k0 - 50} AND k < ${k0 - 40}")
+      (k0 - 50 until k0 - 40).foreach(want.remove)
+      val files = partFiles(dir, "t").size
+      assert(files <= cap, s"$files files after round $i; cap $cap")
+    }
+    assert(partFiles(dir, "t").forall(f => spark.read.parquet(f.getPath).count() > 0),
+      "a zero-row file is left")
+    val got = spark.read.parquet(s"$dir/t.parquet").select("k", "name").as[(Long, String)]
+      .collect().toMap
+    assert(got == want.toMap)
+  }
+
+  test("a rewrite a crash left mid-swap is completed before the engine reads the table") {
+    val (_, dir, Seq(f0, f1, _)) = threeFileWarehouse()
+    val path = s"$dir/t.parquet"
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    import org.apache.hadoop.fs.Path
+    // the staged "delete k < 50": f0's other rows and the list naming f0;
+    // then the target moved aside, and f1 but not f2 moved into tmp
+    spark.read.parquet(s"$path/$f0").filter($"k" >= 50).coalesce(1)
+      .write.parquet(s"$path.tmp_rewrite")
+    val list = fs.create(new Path(s"$path.tmp_rewrite", "_rewrite_touched"))
+    try list.write(f0.getBytes("UTF-8")) finally list.close()
+    assert(fs.rename(new Path(path), new Path(s"$path.pre_rewrite")))
+    assert(fs.rename(new Path(s"$path.pre_rewrite", f1), new Path(s"$path.tmp_rewrite", f1)))
+    val eng = new FlowEngine(spark, dir)
+    assert(eng.connect().get == Seq("t"))
+    assert(eng.getData("SELECT count(*) FROM t").get.head().getLong(0) == 250L)
+    eng.deleteDataWithConditions("t", "k >= 250")
+    assert(keysOf(dir, "t") == (50L until 250L))
+    assert(!new java.io.File(s"$path.pre_rewrite").exists &&
+      !new java.io.File(s"$path.tmp_rewrite").exists)
+    eng.disconnect()
+  }
 }

@@ -58,4 +58,16 @@ class ProfileSpec extends SparkSpec {
     assert(r.has("error") && r.get("rep").asInt == 1)
     assert(!r.has("jobs"))
   }
+
+  test("a frame the caller left persisted does not feed the profiled query") {
+    // the scan q_scan_project reads, cached and materialized by the caller
+    val cached = graft.engine.Sources.lineitem(spark, sf).persist()
+    try {
+      cached.count()
+      val lines = Seq.newBuilder[String]
+      Profile.profile(spark, sf, Seq("q_scan_project"), reps = 1)(lines += _)
+      val r = new ObjectMapper().readTree(lines.result().head)
+      assert(r.get("scans").asInt == 1 && r.get("cache_reads").asInt == 0, r.toString)
+    } finally cached.unpersist()
+  }
 }

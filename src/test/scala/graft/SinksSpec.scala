@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.engine.Sinks
 
 class SinksSpec extends SparkSpec {
@@ -86,5 +87,106 @@ class SinksSpec extends SparkSpec {
     assert(good.count() == 2 && bad.count() == 1)
     assert(bad.select("_corrupt_record").as[String].head().startsWith("not_a_number"))
     df.unpersist()
+  }
+
+  // ---- the swap protocol of overwriteInPlace, one crash state at a time
+
+  private def fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+
+  /** A three-file table at a fresh path: A = {1, 2}, B = {3, 4}, C = {5, 6};
+    * returns the path and the files' names in that order. */
+  private def threeFiles(): (String, Seq[String]) = {
+    val p = tmp()
+    val names = Seq(Seq(1, 2), Seq(3, 4), Seq(5, 6)).map { xs =>
+      val before = parts(p).toSet
+      xs.toDF("x").coalesce(1).write.mode("append").parquet(p)
+      (parts(p).toSet -- before).head
+    }
+    (p, names)
+  }
+
+  private def parts(dir: String): Seq[String] = {
+    val d = new java.io.File(dir)
+    if (!d.isDirectory) Nil
+    else d.list().toSeq.filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted
+  }
+
+  private def rows(p: String): Seq[Int] =
+    spark.read.parquet(p).as[Int].collect().toSeq.sorted
+
+  /** A rewrite of file A of `p` into A' = {10, 20}, staged by hand as
+    * steps 1–2 leave it: the new rows in tmp and the list naming A. */
+  private def stage(p: String, a: String): Unit = {
+    Seq(10, 20).toDF("x").coalesce(1).write.parquet(p + ".tmp_rewrite")
+    val out = fs.create(new Path(p + ".tmp_rewrite", "_rewrite_touched"))
+    try out.write(a.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def leftovers(p: String): Seq[String] =
+    Seq(".tmp_rewrite", ".pre_rewrite").map(p + _).filter(new java.io.File(_).exists) ++
+      Seq(s"$p/_rewrite_touched").filter(new java.io.File(_).exists)
+
+  test("a crash after tmp is written leaves the pre-image, and recovery drops tmp") {
+    val (p, Seq(a, _, _)) = threeFiles()
+    stage(p, a)
+    Sinks.recover(spark, p)
+    assert(rows(p) == Seq(1, 2, 3, 4, 5, 6))
+    assert(leftovers(p).isEmpty, leftovers(p))
+  }
+
+  test("a crash mid-move, with the list present, rolls forward to the post-image") {
+    val (p, Seq(a, b, c)) = threeFiles()
+    stage(p, a)
+    // step 3 done; step 4 moved B into tmp and stopped before C
+    assert(fs.rename(new Path(p), new Path(p + ".pre_rewrite")))
+    assert(fs.rename(new Path(p + ".pre_rewrite", b), new Path(p + ".tmp_rewrite", b)))
+    Sinks.recover(spark, p)
+    assert(rows(p) == Seq(3, 4, 5, 6, 10, 20))
+    assert(parts(p).size == 3 && Set(b, c).subsetOf(parts(p).toSet) && !parts(p).contains(a))
+    assert(leftovers(p).isEmpty, leftovers(p))
+  }
+
+  test("a crash after the final rename keeps the post-image and drops the backup and list") {
+    val (p, Seq(a, b, c)) = threeFiles()
+    stage(p, a)
+    assert(fs.rename(new Path(p), new Path(p + ".pre_rewrite")))
+    for (f <- Seq(b, c))
+      assert(fs.rename(new Path(p + ".pre_rewrite", f), new Path(p + ".tmp_rewrite", f)))
+    assert(fs.rename(new Path(p + ".tmp_rewrite"), new Path(p)))
+    Sinks.recover(spark, p)
+    assert(rows(p) == Seq(3, 4, 5, 6, 10, 20))
+    assert(leftovers(p).isEmpty, leftovers(p))
+  }
+
+  test("a backup with no target and no staged list still refuses to run") {
+    val (p, _) = threeFiles()
+    assert(fs.rename(new Path(p), new Path(p + ".pre_rewrite")))
+    val e = intercept[java.io.IOException](
+      Sinks.overwriteInPlace(spark, Seq(7).toDF("x"), p))
+    assert(e.getMessage.contains("restore failed"))
+    // the backup, the only copy, is untouched
+    assert(rows(p + ".pre_rewrite") == Seq(1, 2, 3, 4, 5, 6))
+    assert(!new java.io.File(p).exists)
+  }
+
+  test("a file appended after the rewrite listed the table survives the swap") {
+    val (p, Seq(a, b, c)) = threeFiles()
+    val listed = Seq(new Path(p, a))
+    val rewritten = spark.read.parquet(listed.map(_.toString): _*).filter($"x" =!= 1)
+    Seq(99).toDF("x").coalesce(1).write.mode("append").parquet(p) // the outside writer
+    Sinks.overwriteInPlace(spark, rewritten, p, files = Some(listed))
+    assert(rows(p) == Seq(2, 3, 4, 5, 6, 99))
+    assert(Set(b, c).subsetOf(parts(p).toSet) && !parts(p).contains(a))
+    assert(leftovers(p).isEmpty, leftovers(p))
+  }
+
+  test("a rewrite that leaves a file with no row removes it, unless the table would have none") {
+    val (p, Seq(a, b, c)) = threeFiles()
+    Sinks.overwriteInPlace(spark, spark.read.parquet(s"$p/$a").filter($"x" > 9), p,
+      files = Some(Seq(new Path(p, a))))
+    assert(parts(p) == Seq(b, c).sorted)
+    Sinks.overwriteInPlace(spark, spark.read.parquet(p).filter($"x" > 9), p)
+    assert(parts(p).size == 1 && rows(p).isEmpty, "the schema carrier stays")
+    assert(spark.read.parquet(p).columns.toSeq == Seq("x"))
   }
 }
