@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.Bridge
 import graft.engine._
 
 /** User-facing facade with the reference's exact operator surface — a
@@ -38,9 +39,12 @@ import graft.engine._
   * the parquet footers ([[graft.engine.Sinks.candidateFiles]]); every
   * other file keeps its bytes, name and mtime, and a mutation that can
   * change no file writes nothing. The swap keeps a file an outside
-  * writer appended while the rewrite ran, and a rewrite a crash cut
-  * short is completed or dropped before the engine next reads the table
-  * ([[graft.engine.Sinks.recover]]). A table holding more files than
+  * writer appended while the rewrite was writing its new files. A
+  * rewrite that fails leaves the table as it was; one whose process
+  * died mid-swap is completed when an engine next connects, or reads
+  * or appends to the table for a mutation
+  * ([[graft.engine.Sinks.recover]]), and `getData` reads the views
+  * `connect()` registered. A table holding more files than
   * `spark.sql.shuffle.partitions` is rewritten whole, which packs its
   * files into at most about that many, so appends between file-granular
   * rewrites cannot grow the file count without bound.
@@ -69,9 +73,9 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
 
   private def tablePath(table: String): String = s"$warehouse/$table.parquet"
 
-  /** The table's path, after completing or dropping a rewrite a crash
-    * cut short ([[Sinks.recover]]): every read of a table goes through
-    * here. */
+  /** The table's path, after completing a rewrite whose process died
+    * mid-swap ([[Sinks.recover]]; nothing is deleted as stale here):
+    * every read of a table goes through here. */
   private def recovered(table: String): String = {
     Sinks.recover(spark, tablePath(table))
     tablePath(table)
@@ -93,11 +97,13 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
     val root = new Path(warehouse)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a table a crash left mid-swap has only its `.pre_rewrite` backup
+    // until recovery completes the swap; one it cannot complete is left out
     val tables = fs.listStatus(root).toSeq
       .map(_.getPath.getName.stripSuffix(".pre_rewrite")).filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).distinct.sorted
+      .filter(t => exists(recovered(t)))
     tables.foreach { t =>
-      val df = spark.read.parquet(recovered(t))
+      val df = spark.read.parquet(tablePath(t))
       schemas(t) = df.schema
       df.createOrReplaceTempView(t)
       registered += t
@@ -225,13 +231,15 @@ final class FlowEngine(val spark: SparkSession, warehouse: String) {
     val ranged = (t.isInstanceOf[DecimalType] || Set[DataType](ByteType, ShortType,
       IntegerType, LongType, StringType, DateType, TimestampType)(t)) &&
       schemaOf(table).find(_.name == k).exists(_.dataType == t)
-    val ks = records.map(r => r.get(r.fieldIndex(k))).filter(_ != null)
+    // each key as the table's type holds it (a decimal rounded to its
+    // scale), as the join compares it
+    val ks = records.map(r => Literal.create(r.get(r.fieldIndex(k)), t)).filter(_.value != null)
     if (!ranged) None
     else if (ks.isEmpty) Some(lit(false))
     else {
       // Spark's own order of the type (strings by UTF-8 bytes, not UTF-16)
-      val ord = TypeUtils.getInterpretedOrdering(t).on[Any](Literal.create(_, t).value)
-      Some(col(k).between(lit(ks.min(ord)), lit(ks.max(ord))))
+      val ord = TypeUtils.getInterpretedOrdering(t).on[Literal](_.value)
+      Some(col(k).between(Bridge.column(ks.min(ord)), Bridge.column(ks.max(ord))))
     }
   }
 

@@ -10,7 +10,8 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetFooterReader}
 import org.apache.spark.sql.graft.Bridge
@@ -82,57 +83,169 @@ object Sinks {
     *     (readers skip `_` files);
     *  3. rename the target to `<path>.pre_rewrite`;
     *  4. move every file of that backup the list does not name into
-    *     tmp, so a file an outside writer appended after the table was
-    *     listed survives the rewrite;
+    *     tmp, so a file an outside writer appended before step 3
+    *     survives the rewrite;
     *  5. rename tmp to the target, then delete the list and the backup.
-    * [[recover]] runs first: a crash anywhere leaves either the target
-    * whole or a state the next call completes. */
+    * Before step 1, what an earlier rewrite left is completed (a listed
+    * mid-swap state, see [[recover]]) or dropped (a stale tmp, or the
+    * backup and list a crash after step 5's rename left); a backup with
+    * neither target nor list is refused, as is a target re-created
+    * mid-swap. When step 4 or 5 fails, the moved files go back into the
+    * backup and it becomes the target again, so the table keeps its
+    * pre-image; only a process that dies in steps 3–5 leaves the table
+    * without a target, for the next [[recover]] to complete. A JVM runs
+    * one rewrite of a table at a time; a second one fails at once. */
   def overwriteInPlace(spark: SparkSession, df: DataFrame, path: String,
       partitionBy: Seq[String] = Nil, files: Option[Seq[Path]] = None): Unit = {
     val target = new Path(path)
-    val (tmp, backup) = (sibling(target, Staged), sibling(target, Backup))
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, target)
-    val replaced = files.fold(dataFiles(fs, target))(_.map(relative(fs, target, _))).toSet
+    val key = fs.makeQualified(target).toString
+    if (!swapping.add(key))
+      throw new java.io.IOException(s"a rewrite of $target is already running")
+    try {
+      stage(fs, df, target, partitionBy, files)
+      swap(fs, target)
+    } finally swapping.remove(key)
+  }
+
+  /** The tables this JVM is rewriting: their mid-swap state is live, not
+    * a crash. */
+  private val swapping = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Steps 1–2 of [[overwriteInPlace]], after completing or dropping
+    * what an earlier rewrite left. */
+  private[graft] def stage(fs: FileSystem, df: DataFrame, target: Path,
+      partitionBy: Seq[String], files: Option[Seq[Path]]): Unit = {
+    val tmp = sibling(target, Staged)
+    clearStale(fs, target)
+    val current = dataFiles(fs, target)
+    val replaced = files.fold(current)(_.map(relative(fs, target, _))).toSet
+    // the list, not a `_SUCCESS` file, marks the staged dir complete
+    // (a file create costs ~9 ms on a local disk: a forked chmod each
+    // for the file and its checksum)
     val w = df.write.mode(SaveMode.Overwrite)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tmp.toString)
     val (empty, full) = dataFiles(fs, tmp).partition(rel => rowCount(fs, new Path(tmp, rel)) == 0)
-    val keepsNone = full.isEmpty && dataFiles(fs, target).forall(replaced)
+    val keepsNone = full.isEmpty && current.forall(replaced)
     (if (keepsNone) empty.drop(1) else empty).foreach(rel =>
       if (!fs.delete(new Path(tmp, rel), false))
         throw new java.io.IOException(s"could not remove zero-row file $rel from $tmp"))
     val list = fs.create(new Path(tmp, Touched), true)
     try list.write(replaced.toSeq.sorted.mkString("\n").getBytes(UTF_8)) finally list.close()
-    if (fs.exists(target) && !fs.rename(target, backup))
-      throw new java.io.IOException(s"could not move $target aside to $backup")
-    finish(fs, target)
   }
 
-  /** Bring the table at `path` to a whole state after a rewrite that
-    * did not finish ([[overwriteInPlace]]'s steps):
-    *  - backup, no target, and a tmp that holds the list (a crash in
-    *    steps 3–5): roll forward, finishing steps 4–5;
-    *  - backup, no target, no list: refuse — the backup may hold the
-    *    only copy;
-    *  - backup and target (a crash after step 5's rename): the target is
-    *    the post-image; drop the list and the backup;
-    *  - tmp without a backup (a crash before step 3): the target is the
-    *    pre-image; drop tmp. */
+  /** Steps 3–5 of [[overwriteInPlace]]. */
+  private[graft] def swap(fs: FileSystem, target: Path): Unit = {
+    val backup = sibling(target, Backup)
+    if (fs.exists(target) && !fs.rename(target, backup))
+      throw new java.io.IOException(s"could not move $target aside to $backup")
+    finish(fs, target, restore = true)
+  }
+
+  /** Complete a rewrite of the table at `path` that a process died in
+    * the middle of: a backup, no target, and a tmp holding the list
+    * (steps 3–5 of [[overwriteInPlace]]) roll forward, finishing steps
+    * 4–5. Nothing is deleted as stale here, and every other state is
+    * left as it is: a tmp without a backup may belong to a rewrite that
+    * is still staging, and a backup beside a target does not stop a
+    * read; the next rewrite drops both. A swap this JVM is running is
+    * never taken for a crash. FlowEngine calls this before it connects
+    * to, reads or appends to a table. */
   def recover(spark: SparkSession, path: String): Unit = {
     val target = new Path(path)
-    recover(target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!swapping.contains(fs.makeQualified(target).toString)) rollForward(fs, target)
+  }
+
+  private def rollForward(fs: FileSystem, target: Path): Unit =
+    if (fs.exists(sibling(target, Backup)) && !fs.exists(target) &&
+        fs.exists(new Path(sibling(target, Staged), Touched)))
+      finish(fs, target, restore = false)
+
+  /** Before a rewrite stages: roll a listed mid-swap state forward, drop
+    * the backup and list a crash after step 5's rename left and any
+    * stale tmp, and refuse a backup that may hold the only copy. */
+  private def clearStale(fs: FileSystem, target: Path): Unit = {
+    val (tmp, backup) = (sibling(target, Staged), sibling(target, Backup))
+    rollForward(fs, target)
+    if (fs.exists(backup)) {
+      // a backup with NO live target and no list means a restore failed
+      // and the backup holds the only copy — deleting it as "stale"
+      // would be permanent data loss; refuse loudly instead
+      if (!fs.exists(target))
+        throw new java.io.IOException(
+          s"$backup exists but $target does not — a previous rewrite's " +
+            s"restore failed; move $backup back to $target before retrying")
+      if (fs.exists(new Path(tmp, Touched))) throw recreated(tmp, backup, target)
+      fs.delete(new Path(target, Touched), false)
+      if (!fs.delete(backup, true))
+        throw new java.io.IOException(s"could not remove stale backup $backup")
+    }
+    if (fs.exists(tmp) && !fs.delete(tmp, true))
+      throw new java.io.IOException(s"could not remove stale $tmp")
+  }
+
+  /** Steps 4–5: the backup's unlisted files join tmp, tmp becomes the
+    * target. If they fail and `restore` is set, the moved files go back
+    * and the backup becomes the target again. A roll-forward does not
+    * restore: the process that died may have moved files this call does
+    * not know of, and a later call completes the swap instead. */
+  private def finish(fs: FileSystem, target: Path, restore: Boolean): Unit = {
+    val (tmp, backup) = (sibling(target, Staged), sibling(target, Backup))
+    val in = fs.open(new Path(tmp, Touched))
+    val listed = try new String(in.readAllBytes(), UTF_8).split('\n').toSet finally in.close()
+    val moved = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      for (rel <- dataFiles(fs, backup) if !listed(rel)) {
+        move(fs, rel, backup, tmp)
+        moved += rel
+      }
+      // a rename onto an existing directory would nest tmp inside it
+      if (fs.exists(target)) throw recreated(tmp, backup, target)
+      if (!fs.rename(tmp, target))
+        throw new java.io.IOException(s"could not move rewritten $tmp into $target")
+    } catch {
+      case e: java.io.IOException if restore && !fs.exists(target) =>
+        val restored = scala.util.Try {
+          moved.foreach(move(fs, _, tmp, backup))
+          if (fs.exists(backup) && !fs.rename(backup, target))
+            throw new java.io.IOException(s"could not move $backup back to $target")
+        }
+        if (restored.isFailure)
+          throw new java.io.IOException(s"${e.getMessage}, and restoring $backup " +
+            "failed; the next rewrite or read of the table completes the swap", e)
+        fs.delete(tmp, true)
+        throw new java.io.IOException(s"${e.getMessage} (original restored)", e)
+    }
+    fs.delete(new Path(target, Touched), false)
+    if (!fs.delete(backup, true) && fs.exists(backup))
+      throw new java.io.IOException(s"could not remove backup $backup")
+  }
+
+  private def recreated(tmp: Path, backup: Path, target: Path) = new java.io.IOException(
+    s"$target was re-created while a rewrite was swapping it in; the " +
+      s"table's rows are split between $backup and $tmp — merge them by hand")
+
+  /** Move the file `rel` from under `from` to under `to`. */
+  private def move(fs: FileSystem, rel: String, from: Path, to: Path): Unit = {
+    val dst = new Path(to, rel)
+    if (!fs.mkdirs(dst.getParent) || !fs.rename(new Path(from, rel), dst))
+      throw new java.io.IOException(s"could not move $rel from $from into $to")
   }
 
   /** The files `table` (one plain parquet table read) lists, and those
     * of them that can hold a row matching `where` (every one for None).
-    * Planning only, no Spark job: each file's footer row-group
-    * statistics are tested against the pushed data filters of the scan
-    * of `table.filter(where)` with parquet's `RowGroupFilter`, the
-    * conservative test the reader uses to skip row groups, so a file
-    * with a matching row is never left out. With no pushed filter, or a
-    * Hive-partitioned table, every file can; a filter the optimizer
-    * folds to false leaves no scan and no file. */
+    * Optimizer only, no physical planning and no Spark job: the
+    * conjuncts of `table.filter(where)`'s optimized scan filter are
+    * translated as the file scan translates its data filters, and each
+    * file's footer row-group statistics are tested against them with
+    * parquet's `RowGroupFilter`, the conservative test the reader uses
+    * to skip row groups, so a file with a matching row is never left
+    * out. With no translatable filter, a plan that is not a filtered
+    * scan of the table, or a Hive-partitioned table, every file can; a
+    * filter the optimizer folds to false leaves no file. */
   def candidateFiles(table: DataFrame, where: Option[Column]): (Seq[Path], Seq[Path]) = {
     val relation = table.queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l.relation }
@@ -140,9 +253,13 @@ object Sinks {
       .getOrElse(throw new IllegalArgumentException("not a file table read"))
     val all = relation.location.listFiles(Nil, Nil).flatMap(_.files).map(_.getPath)
     val hit = where.filter(_ => relation.partitionSchema.isEmpty).fold(all) { w =>
-      table.filter(w).queryExecution.sparkPlan
-        .collectFirst { case s: FileSourceScanExec => Bridge.pushedFilters(s) }
-        .fold(Seq.empty[Path])(fs => if (fs.isEmpty) all else all.filter(mayMatch(table, fs)))
+      table.filter(w).queryExecution.optimizedPlan match {
+        case PhysicalOperation(_, conds, l: LogicalRelation) if l.relation eq relation =>
+          val pushed = Bridge.sourceFilters(conds, l)
+          if (pushed.isEmpty) all else all.filter(mayMatch(table, pushed))
+        case l: LocalRelation if l.data.isEmpty => Nil
+        case _ => all
+      }
     }
     (all, hit)
   }
@@ -161,56 +278,6 @@ object Sinks {
         conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString))
     filters.flatMap(pf.createFilter).reduceOption(FilterApi.and).forall(p =>
       !RowGroupFilter.filterRowGroups(FilterCompat.get(p), meta.getBlocks, schema).isEmpty)
-  }
-
-  private def recover(fs: FileSystem, target: Path): Unit = {
-    val (tmp, backup) = (sibling(target, Staged), sibling(target, Backup))
-    val listed = fs.exists(new Path(tmp, Touched))
-    if (fs.exists(backup)) {
-      if (!fs.exists(target)) {
-        if (listed) finish(fs, target)
-        // a backup with NO live target and no list means a restore failed
-        // and the backup holds the only copy — deleting it as "stale"
-        // would be permanent data loss; refuse loudly instead
-        else throw new java.io.IOException(
-          s"$backup exists but $target does not — a previous rewrite's " +
-            s"restore failed; move $backup back to $target before retrying")
-      } else if (listed)
-        throw new java.io.IOException(
-          s"$target was re-created while a rewrite was swapping it in; the " +
-            s"table's rows are split between $backup and $tmp — merge them by hand")
-      else {
-        fs.delete(new Path(target, Touched), false)
-        if (!fs.delete(backup, true))
-          throw new java.io.IOException(s"could not remove stale backup $backup")
-      }
-    }
-    if (fs.exists(tmp) && !fs.delete(tmp, true))
-      throw new java.io.IOException(s"could not remove stale $tmp")
-  }
-
-  /** Steps 4–5 of the swap: the backup's unlisted files join tmp, tmp
-    * becomes the target. A failure leaves a state [[recover]] completes. */
-  private def finish(fs: FileSystem, target: Path): Unit = {
-    val (tmp, backup) = (sibling(target, Staged), sibling(target, Backup))
-    if (fs.exists(backup)) {
-      val in = fs.open(new Path(tmp, Touched))
-      val listed = try new String(in.readAllBytes(), UTF_8).split('\n').toSet finally in.close()
-      for (rel <- dataFiles(fs, backup) if !listed(rel)) {
-        val to = new Path(tmp, rel)
-        if (!fs.mkdirs(to.getParent) || !fs.rename(new Path(backup, rel), to))
-          throw new java.io.IOException(
-            s"could not move untouched $rel from $backup into $tmp; the next " +
-              "rewrite or read of the table completes the swap")
-      }
-    }
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(
-        s"could not move rewritten $tmp into $target; the next rewrite or " +
-          "read of the table completes the swap")
-    fs.delete(new Path(target, Touched), false)
-    if (!fs.delete(backup, true) && fs.exists(backup))
-      throw new java.io.IOException(s"could not remove backup $backup")
   }
 
   private val Staged = ".tmp_rewrite"

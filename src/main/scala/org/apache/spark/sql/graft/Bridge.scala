@@ -2,10 +2,9 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils}
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils, LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.classic.{ExpressionUtils, Dataset => CDataset, SparkSession => CSparkSession}
@@ -27,11 +26,14 @@ object Bridge {
   /** The session's typed SQL settings: values parsed the way Spark
     * parses them (`256m` byte strings included). */
   def conf(s: SparkSession): SQLConf = s.asInstanceOf[CSparkSession].sessionState.conf
-  /** A file scan's data filters as the data-source filters it pushes to
-    * its reader (`pushedDownFilters` itself is protected). */
-  def pushedFilters(scan: FileSourceScanExec): Seq[Filter] =
-    scan.dataFilters.flatMap(DataSourceStrategy.translateFilter(_,
-      DataSourceUtils.supportNestedPredicatePushdown(scan.relation)))
+  /** The data-source filters a file scan of `relation` pushes to its
+    * reader for the filter conjuncts `conds`, derived as the file scan
+    * strategy derives them (its helpers are `private[sql]`). */
+  def sourceFilters(conds: Seq[Expression], relation: LogicalRelation): Seq[Filter] =
+    DataSourceStrategy.normalizeExprs(
+      conds.filter(c => c.deterministic && !SubqueryExpression.hasSubquery(c)), relation.output)
+      .flatMap(DataSourceStrategy.translateFilter(_,
+        DataSourceUtils.supportNestedPredicatePushdown(relation.relation)))
   /** Block until every event posted so far has reached the listeners
     * (the bus is `private[spark]`), so a listener's totals are final. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

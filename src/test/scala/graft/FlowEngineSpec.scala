@@ -4,9 +4,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
 import graft.api.FlowEngine
-import graft.engine.{JobCounter, Types}
+import graft.engine.{JobCounter, Sinks, Types}
 
 class FlowEngineSpec extends SparkSpec {
   import spark.implicits._
@@ -344,6 +344,44 @@ class FlowEngineSpec extends SparkSpec {
     assert(keysOf(dir, "t") == (50L until 250L))
     assert(!new java.io.File(s"$path.pre_rewrite").exists &&
       !new java.io.File(s"$path.tmp_rewrite").exists)
+    eng.disconnect()
+  }
+
+  test("reads and an append between a rewrite's staging and its swap lose no row") {
+    val (_, dir, Seq(f0, _, _)) = threeFileWarehouse()
+    val path = new org.apache.hadoop.fs.Path(s"$dir/t.parquet")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    // steps 1-2 of "delete k < 50": f0's other rows and the list, not yet swapped in
+    Sinks.stage(fs, spark.read.parquet(s"$path/$f0").filter($"k" >= 50), path, Nil,
+      Some(Seq(new org.apache.hadoop.fs.Path(path, f0))))
+    // meanwhile, another engine connects, extracts and appends
+    val other = new FlowEngine(spark, dir)
+    assert(other.connect().get == Seq("t"))
+    assert(other.getData("SELECT count(*) FROM t").get.head().getLong(0) == 300L)
+    other.insertData("t", Seq((500L, "n500", 750.0)).toDF("k", "name", "v"))
+    assert(new java.io.File(s"$path.tmp_rewrite/_rewrite_touched").exists)
+    Sinks.swap(fs, path)
+    assert(keysOf(dir, "t") == (50L until 300L) :+ 500L)
+    assert(!new java.io.File(s"$path.pre_rewrite").exists &&
+      !new java.io.File(s"$path.tmp_rewrite").exists)
+    other.disconnect()
+  }
+
+  test("updateData matches a decimal key given with more places than the column's scale") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_whd").toString
+    val schema = StructType(Seq(StructField("k", DecimalType(10, 2)), StructField("name", StringType)))
+    for (ks <- Seq(Seq("0.50", "1.00"), Seq("5.00", "6.00")))
+      spark.createDataFrame(ks.map(k => Row(new java.math.BigDecimal(k), s"n$k")).asJava, schema)
+        .coalesce(1).write.mode("append").parquet(s"$dir/d.parquet")
+    val eng = new FlowEngine(spark, dir)
+    eng.connect()
+    // 1.004 is the row 1.00 once the records take the column's type
+    eng.updateData("d",
+      Seq(new GenericRowWithSchema(Array(new java.math.BigDecimal("1.004"), "U"), schema)), Seq("k"))
+    val got = spark.read.parquet(s"$dir/d.parquet").as[(java.math.BigDecimal, String)]
+      .collect().map { case (k, n) => k.toPlainString -> n }.toMap
+    assert(got == Map("0.50" -> "n0.50", "1.00" -> "U", "5.00" -> "n5.00", "6.00" -> "n6.00"))
     eng.disconnect()
   }
 }

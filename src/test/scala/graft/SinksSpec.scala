@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import graft.engine.Sinks
 
 class SinksSpec extends SparkSpec {
@@ -126,11 +126,17 @@ class SinksSpec extends SparkSpec {
     Seq(".tmp_rewrite", ".pre_rewrite").map(p + _).filter(new java.io.File(_).exists) ++
       Seq(s"$p/_rewrite_touched").filter(new java.io.File(_).exists)
 
-  test("a crash after tmp is written leaves the pre-image, and recovery drops tmp") {
-    val (p, Seq(a, _, _)) = threeFiles()
+  test("a crash after tmp is written leaves the pre-image; a read keeps tmp, the next rewrite drops it") {
+    val (p, Seq(a, b, c)) = threeFiles()
     stage(p, a)
+    // a read cannot tell this tmp from one a live rewrite is staging
     Sinks.recover(spark, p)
     assert(rows(p) == Seq(1, 2, 3, 4, 5, 6))
+    assert(leftovers(p) == Seq(p + ".tmp_rewrite"))
+    Sinks.overwriteInPlace(spark, spark.read.parquet(s"$p/$b").filter($"x" =!= 3), p,
+      files = Some(Seq(new Path(p, b))))
+    assert(rows(p) == Seq(1, 2, 4, 5, 6))
+    assert(Set(a, c).subsetOf(parts(p).toSet) && !parts(p).contains(b))
     assert(leftovers(p).isEmpty, leftovers(p))
   }
 
@@ -146,7 +152,7 @@ class SinksSpec extends SparkSpec {
     assert(leftovers(p).isEmpty, leftovers(p))
   }
 
-  test("a crash after the final rename keeps the post-image and drops the backup and list") {
+  test("a crash after the final rename: reads see the post-image, the next rewrite drops the backup and list") {
     val (p, Seq(a, b, c)) = threeFiles()
     stage(p, a)
     assert(fs.rename(new Path(p), new Path(p + ".pre_rewrite")))
@@ -155,6 +161,25 @@ class SinksSpec extends SparkSpec {
     assert(fs.rename(new Path(p + ".tmp_rewrite"), new Path(p)))
     Sinks.recover(spark, p)
     assert(rows(p) == Seq(3, 4, 5, 6, 10, 20))
+    Sinks.overwriteInPlace(spark, spark.read.parquet(s"$p/$b").filter($"x" =!= 3), p,
+      files = Some(Seq(new Path(p, b))))
+    assert(rows(p) == Seq(4, 5, 6, 10, 20))
+    assert(leftovers(p).isEmpty, leftovers(p))
+  }
+
+  test("a failed final rename puts the pre-image back") {
+    val (p, Seq(a, b, c)) = threeFiles()
+    val target = new Path(p)
+    Sinks.stage(fs, spark.read.parquet(s"$p/$a").filter($"x" =!= 1), target, Nil,
+      Some(Seq(new Path(p, a))))
+    val failing = new FilterFileSystem(fs) {
+      override def rename(src: Path, dst: Path): Boolean =
+        !src.getName.endsWith(".tmp_rewrite") && super.rename(src, dst)
+    }
+    val e = intercept[java.io.IOException](Sinks.swap(failing, target))
+    assert(e.getMessage.contains("original restored"), e.getMessage)
+    assert(rows(p) == Seq(1, 2, 3, 4, 5, 6))
+    assert(parts(p) == Seq(a, b, c).sorted)
     assert(leftovers(p).isEmpty, leftovers(p))
   }
 
