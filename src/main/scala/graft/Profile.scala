@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import graft.engine.{JobCounter, Sessions, Warm}
+import graft.engine.{JobCounter, Sessions, Stages, Warm}
 
 /** Per-query profile of declared queries: where each query's time goes
   * and what its final plan is.
@@ -16,10 +16,13 @@ import graft.engine.{JobCounter, Sessions, Warm}
   * Usage: `sbt "runMain graft.Profile <sfDir> <q1,q2,…|all> [reps=3]"`
   *
   * The session, warm-up and `Warm.stages` pass are Bench's; stdout gets
-  * one `{"stages_s": …}` line, then one JSON line per query and rep. Each
-  * rep runs under its own job group ([[JobCounter]]) and reports:
-  *   - `construct_s`: the registry call (stage builds and eager counts
-  *     in the query builder land here);
+  * one `{"stages_s": …}` line, one `{"stage": …}` line per resolved
+  * stage ([[stageRecords]]), then one JSON line per query and rep. Each
+  * rep runs under its own job groups ([[JobCounter]]) and reports:
+  *   - `construct_s`: the query builder's call (stage builds and eager
+  *     counts in the builder land here; the registry, which builds every
+  *     entry, is read once per run, outside it), with `construct_jobs` and
+  *     `construct_cpu_s`, the jobs and executor CPU of that call;
   *   - `analysis_s`, `optimization_s`, `planning_s`: the query's
   *     `QueryPlanningTracker` phases;
   *   - `execute_s`: the frame's own executed plan run to completion, so
@@ -27,7 +30,8 @@ import graft.engine.{JobCounter, Sessions, Warm}
   *   - `rows`: the rows that run produced, the query's output row count;
   *   - `jobs`, `tasks`, `cpu_s`, `shuffle_read_bytes`,
   *     `shuffle_write_bytes`, `spill_bytes`, `task_ms_max`, `task_ms_p50`:
-  *     totals over every job of the rep, construction included;
+  *     totals over the jobs of planning and execution, construction
+  *     excluded;
   *   - `scans`: file scan nodes in the final plan; `cache_reads`: its
   *     reads of cached frames ([[cacheReads]], summed); `plan_hash`: a
   *     hash of the final plan, ids masked, equal across runs of one plan.
@@ -52,6 +56,7 @@ object Profile {
     val t0 = System.nanoTime()
     Warm.stages(spark, dir)
     println(s"""{"stages_s":${seconds(System.nanoTime() - t0)}}""")
+    stageRecords(println)
     profile(spark, dir, names, reps)(println)
     spark.stop()
   }
@@ -62,23 +67,38 @@ object Profile {
     * more at the end, as in Bench. */
   def profile(spark: SparkSession, dir: String, names: Seq[String], reps: Int)(
       emit: String => Unit): Unit = {
+    val fns = SparkEntry.queries
     for (name <- names; rep <- 1 to reps) {
       spark.catalog.clearCache()
       val head = s""""query":${Bench.q(name)},"rep":$rep"""
-      try emit(s"{$head,${one(spark, dir, name, withPlan = rep == reps)}}")
+      try emit(s"{$head,${one(spark, dir, fns(name), withPlan = rep == reps)}}")
       catch { case NonFatal(e) =>
         emit(s"""{$head,"error":${Bench.q(String.valueOf(e.getMessage))}}""") }
     }
     spark.catalog.clearCache()
   }
 
-  /** The JSON fields (no braces) of one profiled run of `name`. */
-  private def one(spark: SparkSession, dir: String, name: String,
+  /** One `{"stage": …}` JSON line per stage this JVM has resolved, from
+    * its manifest: rows, bytes, files, codec and build seconds (of the
+    * build that published it, which may be an earlier JVM's). */
+  def stageRecords(emit: String => Unit): Unit =
+    Stages.resolved.foreach { p =>
+      val m = p.manifest
+      emit(s"""{"stage":${Bench.q(p.stage)},"rows":${m.rows},"bytes":${m.bytes},""" +
+        s""""files":${m.files},"codec":${Bench.q(m.codec)},"build_s":${m.buildS}}""")
+    }
+
+  /** The JSON fields (no braces) of one profiled run of the query `fn`
+    * builds. */
+  private def one(spark: SparkSession, dir: String,
+      fn: (SparkSession, String) => DataFrame,
       withPlan: Boolean): String = {
-    val ((fields, plan), totals) = JobCounter.measure(spark.sparkContext) {
+    val ((df, constructNs), built) = JobCounter.measure(spark.sparkContext) {
       val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, dir)
-      val t1 = System.nanoTime()
+      val df = fn(spark, dir)
+      (df, System.nanoTime() - t0)
+    }
+    val ((fields, plan), totals) = JobCounter.measure(spark.sparkContext) {
       val qe = df.queryExecution
       qe.executedPlan
       val t2 = System.nanoTime()
@@ -88,7 +108,9 @@ object Profile {
       def phase(p: String): String =
         phases.get(p).map(ps => seconds(ps.durationMs * 1000000L)).getOrElse("0")
       (Seq(
-        "construct_s" -> seconds(t1 - t0),
+        "construct_s" -> seconds(constructNs),
+        "construct_jobs" -> built.jobs.toString,
+        "construct_cpu_s" -> seconds(built.cpuNs),
         "analysis_s" -> phase(QueryPlanningTracker.ANALYSIS),
         "optimization_s" -> phase(QueryPlanningTracker.OPTIMIZATION),
         "planning_s" -> phase(QueryPlanningTracker.PLANNING),

@@ -74,9 +74,15 @@ object Similarity extends Serializable {
     * O(index) — the same pass that canonicalizes the corpus, and like
     * it checkpointed once per index (Stages.materialize): the ~16
     * embedding queries scan canonical parquet, and the lshBitsFor
-    * count() is a parquet metadata read. */
-  def canonEmb(s: SparkSession, d: String): DataFrame =
-    Stages.materialize(s, "canon_emb", d)(canonEmbOf(s, d))
+    * count is the stage manifest's row count ([[canonEmbRows]]). */
+  def canonEmb(s: SparkSession, d: String): DataFrame = canonEmbStage(s, d).read(s)
+
+  /** The canonical embedding count, from the stage's manifest: no job. */
+  private[graft] def canonEmbRows(s: SparkSession, d: String): Long =
+    canonEmbStage(s, d).manifest.rows
+
+  private def canonEmbStage(s: SparkSession, d: String): Published =
+    Stages.resolve(s, "canon_emb", d)(canonEmbOf(s, d))
 
   private def canonEmbOf(s: SparkSession, d: String): DataFrame = {
     val key = struct(
@@ -210,7 +216,7 @@ object Similarity extends Serializable {
     * bucket. Adaptive bit count keeps per-query candidates ≤ ~
     * [[TargetBucket]] as the corpus grows. */
   def simLsh(s: SparkSession, d: String, k: Int = 3): DataFrame = {
-    val bits = lshBitsFor(canonEmb(s, d).count())
+    val bits = lshBitsFor(canonEmbRows(s, d))
     val vs = vectors(s, d).withColumn("bkt", lshBucket(col("v"), bits))
     val q = vs.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
@@ -1090,7 +1096,7 @@ object Similarity extends Serializable {
     * output is ≤ 20 fixed decile rows. Deciles floor(cos·10), clamped
     * to [-10, 9] so cos = 1.0 lands in the top band. */
   def simHist(s: SparkSession, d: String): DataFrame = {
-    val bits = lshBitsFor(canonEmb(s, d).count())
+    val bits = lshBitsFor(canonEmbRows(s, d))
     val vs = vectors(s, d).withColumn("bkt", lshBucket(col("v"), bits))
     val lhs = vs.select(col("vec_id").as("a"), col("v").as("va"),
       col("nm").as("na"), col("bkt"))
@@ -1385,7 +1391,7 @@ object Similarity extends Serializable {
     * recall for that bound; [[dedupEmbedBanded]] is the recall-preserving
     * OR-construction over independent projection bands. */
   def dedupEmbed(s: SparkSession, d: String, threshold: Double = 0.4): DataFrame = {
-    val bits = lshBitsFor(canonEmb(s, d).count())
+    val bits = lshBitsFor(canonEmbRows(s, d))
     val vs = vectors(s, d).withColumn("bkt", lshBucket(col("v"), bits))
     val x = vs.select(col("bkt"), col("vec_id").as("a"),
       col("v").as("va"), col("nm").as("na"))
@@ -1556,9 +1562,9 @@ object Similarity extends Serializable {
       threshold: Double = SemDedupCos): DataFrame =
     // adaptive K ([[semDedupCells]]): at fixed K the within-cell pair
     // count grows (N/K)²·K = N²/K — measured 19.5× rows for 10× docs
-    // on the k=10 replica leg before this; the count() is a parquet
-    // metadata read on the materialized canon_emb stage
-    semDedupOf(vectors(s, d), canonEmb(s, d).count(), threshold)
+    // on the k=10 replica leg before this; the count is the canon_emb
+    // stage manifest's
+    semDedupOf(vectors(s, d), canonEmbRows(s, d), threshold)
 
   /** Corpus-size cap for the GATE form of q_semdedup
     * ([[semDedupGated]]). The DuckDB oracle mirrors the nearest-centroid
@@ -1583,7 +1589,7 @@ object Similarity extends Serializable {
   def semDedupGated(s: SparkSession, d: String,
       threshold: Double = SemDedupCos,
       cap: Long = SemDedupGateCap): DataFrame = {
-    val n = canonEmb(s, d).count()
+    val n = canonEmbRows(s, d)
     if (n <= cap) semDedupOf(vectors(s, d), n, threshold)
     else semDedupOf(
       hashRankedLimit(vectors(s, d), "g_", cap.toInt), cap, threshold)
@@ -1689,7 +1695,7 @@ object Similarity extends Serializable {
   def semDedupHierGated(s: SparkSession, d: String,
       threshold: Double = SemDedupCos,
       cap: Long = SemDedupGateCap): DataFrame = {
-    val n = canonEmb(s, d).count()
+    val n = canonEmbRows(s, d)
     val vsub =
       if (n <= cap) vectors(s, d)
       else hashRankedLimit(vectors(s, d), "g_", cap.toInt)

@@ -1,6 +1,48 @@
 package graft.engine
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
+
+/** What a published stage holds, recorded once when it is built: the
+  * schema `spark.read.parquet` infers for it (field metadata included),
+  * its exact rows summed from the part-file footers, its part files'
+  * bytes and count, the codec of its column chunks and its build
+  * seconds. */
+final case class Manifest(schema: StructType, rows: Long, bytes: Long,
+    files: Int, codec: String, buildS: Double) {
+  private[engine] def render: String =
+    s"rows=$rows\nbytes=$bytes\nfiles=$files\ncodec=$codec\nbuild_s=$buildS\n" +
+      s"schema=${schema.json}"
+}
+
+private[engine] object Manifest {
+  /** The manifest of `render`'s lines, or None when a field is missing
+    * or malformed. */
+  def parse(lines: Seq[String]): Option[Manifest] = {
+    val kv = lines.flatMap { l =>
+      val i = l.indexOf('=')
+      if (i > 0) Some(l.take(i) -> l.drop(i + 1)) else None
+    }.toMap
+    try Some(Manifest(
+      DataType.fromJson(kv("schema")).asInstanceOf[StructType],
+      kv("rows").toLong, kv("bytes").toLong, kv("files").toInt,
+      kv("codec"), kv("build_s").toDouble))
+    catch { case scala.util.control.NonFatal(_) => None }
+  }
+}
+
+/** A resolved stage: the attempt directory its pointer names, and the
+  * pointer's manifest. */
+final case class Published(stage: String, path: String, manifest: Manifest) {
+  /** The stage's rows, read with the manifest's schema: no Spark job. */
+  def read(s: SparkSession): DataFrame =
+    s.read.schema(manifest.schema).parquet(path)
+}
 
 /** Per-JVM materialization of shared pipeline stages.
   *
@@ -23,18 +65,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Stage paths are content- AND definition-keyed: the digest covers the
   * stage name, the input dir, a fingerprint of the input's file listing
-  * (name, size, mtime of every file) and the canonicalized logical plan
-  * that defines the stage — so regenerating the corpus under the same
-  * path, or changing the code that computes a stage, yields a different
-  * stage path rather than silently serving stale data. Writers build into a private attempt directory and PUBLISH via
-  * a pointer file written with create-exclusive semantics — never by
-  * renaming a directory onto the target path. A directory rename has a
-  * cross-process TOCTOU: if another JVM commits between our existence
-  * check and our rename, HDFS `rename(tmp, target)` moves tmp *inside*
-  * the committed target (and still returns true), leaving stray debris
-  * in the stage output. With a pointer file, the loser of the publish
-  * race just deletes its own attempt and reads the winner's.
-  */
+  * (name, size, mtime of every file), the canonicalized logical plan
+  * that defines the stage and [[LayoutVersion]] — so regenerating the
+  * corpus under the same path, changing the code that computes a stage,
+  * or changing what a published stage holds yields a different stage
+  * path rather than silently serving stale data. Writers build into a
+  * private attempt directory and PUBLISH via a pointer file written with
+  * create-exclusive semantics — never by renaming a directory onto the
+  * target path. A directory rename has a cross-process TOCTOU: if
+  * another JVM commits between our existence check and our rename, HDFS
+  * `rename(tmp, target)` moves tmp *inside* the committed target (and
+  * still returns true), leaving stray debris in the stage output. With a
+  * pointer file, the loser of the publish race just deletes its own
+  * attempt and reads the winner's.
+  *
+  * Stage files are parquet with zstd column chunks ([[Codec]], a fixed
+  * choice: stages are written once and scanned by every consumer, so
+  * the denser codec pays on every scan).
+  *
+  * The pointer is self-describing. One file, created in one step, it
+  * holds the attempt path, then the stage's [[Manifest]] as
+  * `key=value` lines (`rows`, `bytes`, `files`, `codec`, `build_s`, and
+  * `schema` as `StructType.json`), then the `#end` terminator:
+  * {{{
+  * /stages/corpus-0a1b2c3d4e5f-attempt-9f8e7d6c
+  * rows=1000
+  * bytes=38189
+  * files=1
+  * codec=zstd
+  * build_s=0.84
+  * schema={"type":"struct","fields":[…]}
+  * #end
+  * }}}
+  * So a stage hit reads with the manifest's schema and launches no
+  * Spark job (a bare `spark.read.parquet` runs one to infer the
+  * schema), and consumers take the stage's row count from the manifest
+  * ([[resolve]]) instead of scanning. The schema is inferred once per
+  * build, from the written files, so it is exactly what a bare read
+  * would report, field metadata (the minhash family stamp) included. On
+  * every memo miss the attempt's part files and bytes are checked
+  * against the manifest: a pointer to a truncated or missing attempt is
+  * dead and is re-elected, as below. */
 object Stages {
 
   /** Checkpoint root. Defaults to a per-checkout persistent directory
@@ -63,25 +134,37 @@ object Stages {
     * writes to. */
   def defaultRoot: String = root
 
-  private val done = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val done = new java.util.concurrent.ConcurrentHashMap[String, Published]()
   private val buildLock = new Object
+
+  /** The parquet codec of every stage file. */
+  private val Codec = "zstd"
+
+  /** Version of what a published stage holds, part of every stage
+    * path's digest. 2: zstd files and a manifest in the pointer. A
+    * pointer of an older layout is therefore never adopted. */
+  private val LayoutVersion = 2
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
 
   /** Fingerprint of the input directory's (recursive) file listing —
-    * path, length, mtime per file. Listing only; never reads data. */
-  private def fingerprint(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    * path, length, mtime per file. Listing only; never reads data. It
+    * walks with `listStatus`: Hadoop's recursive `listFiles` builds a
+    * `LocatedFileStatus` per file, which on the local filesystem forks
+    * a process to read its permissions. Not memoized: every call sees
+    * the directory as it is now, so an input rewritten in place gets a
+    * new fingerprint in the same JVM. */
+  private[engine] def fingerprint(s: SparkSession, dir: String): String = {
+    val p = new Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return "absent"
-    val it = fs.listFiles(p, true)
     val parts = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      parts += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else parts += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
     }
+    try walk(p) catch { case _: java.io.FileNotFoundException => return "absent" }
     md5hex(parts.result().sorted.mkString("\n"))
   }
 
@@ -117,7 +200,14 @@ object Stages {
     * before the content settled) — the unreferenced output is left for
     * the age-gated reaper rather than risking a dangling reader. */
   def materialize(s: SparkSession, stage: String, dir: String)(
-      build: => DataFrame): DataFrame = {
+      build: => DataFrame): DataFrame =
+    resolve(s, stage, dir)(build).read(s)
+
+  /** The published stage [[materialize]] reads: its path and manifest,
+    * for consumers that need the stage's row count or schema rather
+    * than (or besides) its rows. Same memo, same build protocol. */
+  def resolve(s: SparkSession, stage: String, dir: String)(
+      build: => DataFrame): Published = {
     // In-JVM memo key: the input-dir file listing (name/size/mtime) is
     // part of it — keyed by (stage, dir) alone, a long-lived driver
     // would keep serving the old stage after the corpus under `dir` is
@@ -127,7 +217,7 @@ object Stages {
     // memo hits.
     val key = s"$stage|$dir|${fingerprint(s, dir)}"
     val cached = done.get(key)
-    val path = if (cached != null) cached else buildLock.synchronized {
+    if (cached != null) cached else buildLock.synchronized {
       val again = done.get(key)
       if (again != null) again
       else {
@@ -142,23 +232,27 @@ object Stages {
         // the key.
         val df = build
         val defFp = md5hex(df.queryExecution.logical.canonicalized.toString)
-        val p = s"$root/$stage-${md5hex(s"$key|$defFp")}"
-        val fs = new org.apache.hadoop.fs.Path(p)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val ptr = new org.apache.hadoop.fs.Path(s"$p.ptr")
-        var resolved: String = null
+        val p = s"$root/$stage-${md5hex(s"$key|$defFp|layout=$LayoutVersion")}"
+        val fs = new Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
+        val ptr = new Path(s"$p.ptr")
+        var resolved: Published = null
         var rounds = 0
         while (resolved == null) {
           rounds += 1
           if (!fs.exists(ptr)) {
-            val attempt = new org.apache.hadoop.fs.Path(
+            val attempt = new Path(
               s"$p-attempt-${java.util.UUID.randomUUID().toString.take(8)}")
             val t0 = System.nanoTime()
-            df.write.mode("overwrite").parquet(attempt.toString)
-            compactAttempt(s, fs, attempt)
-            System.err.println(f"[stages] built $stage in " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-            if (!publish(fs, ptr, attempt.toString)) {
+            df.write.mode("overwrite").option("compression", Codec)
+              .parquet(attempt.toString)
+            // the one schema inference of this stage: every hit reads
+            // with it (as `Published.read`)
+            val schema = s.read.parquet(attempt.toString).schema
+            compactAttempt(s, fs, attempt, schema)
+            val buildS = (System.nanoTime() - t0) / 1e9
+            System.err.println(f"[stages] built $stage in $buildS%.2f s")
+            val manifest = describe(fs, attempt, schema, buildS)
+            if (!publish(fs, ptr, s"$attempt\n${manifest.render}")) {
               // clean loss (our create-exclusive threw pointer-exists: we
               // never published our path anywhere) — ours is unreferenced
               fs.delete(attempt, true)
@@ -170,27 +264,33 @@ object Stages {
             // deleting either output here risks dangling readers — leave
             // both for the age-gated reaper and follow the pointer.
           }
-          try resolved = readPointer(fs, ptr)
-          catch {
-            // a publisher whose post-win write failed deletes its broken
-            // pointer (see publish); a reader that raced past the
-            // exists-check must RE-ELECT, not crash — bounded so a
-            // persistently vanishing pointer still surfaces as an error
-            case _: java.io.FileNotFoundException if rounds < 3 => ()
-          }
-          // A pointer can outlive its attempt directory on a persistent
-          // root (tmp reapers age out the big data dir but keep — or
-          // recreate interest in — the tiny pointer file). A pointer
-          // naming a missing directory is permanently dead by protocol
-          // (pointers are never replaced), so delete it and RE-ELECT
-          // rather than memoizing a path every read would fail on.
-          if (resolved != null &&
-              !fs.exists(new org.apache.hadoop.fs.Path(resolved))) {
-            if (rounds >= 3)
-              throw new IllegalStateException(
-                s"stage $stage: pointer $ptr names missing dir $resolved")
-            fs.delete(ptr, false)
-            resolved = null
+          val text =
+            try readPointer(fs, ptr)
+            catch {
+              // a publisher whose post-win write failed deletes its broken
+              // pointer (see publish); a reader that raced past the
+              // exists-check must RE-ELECT, not crash — bounded so a
+              // persistently vanishing pointer still surfaces as an error
+              case _: java.io.FileNotFoundException if rounds < 3 => null
+            }
+          // A pointer can outlive its attempt directory, or part of it,
+          // on a persistent root (tmp reapers age out the big data files
+          // but keep the tiny pointer file). A pointer whose attempt does
+          // not hold the part files and bytes its manifest names is
+          // permanently dead by protocol (pointers are never replaced),
+          // so delete it and RE-ELECT rather than memoizing a path every
+          // read would fail on, or serving a stage missing rows.
+          if (text != null) {
+            val lines = text.split('\n').toSeq
+            val pub = Manifest.parse(lines.drop(1))
+              .map(Published(stage, lines.head.trim, _))
+            if (pub.exists(intact(fs, _))) resolved = pub.get
+            else {
+              if (rounds >= 3)
+                throw new IllegalStateException(s"stage $stage: pointer $ptr " +
+                  s"names a missing or truncated dir ${lines.head.trim}")
+              fs.delete(ptr, false)
+            }
           }
         }
         // reap on EVERY memo miss, not only the build branch: double-win
@@ -198,13 +298,42 @@ object Stages {
         // collectable after the pointer exists, else they leak forever
         // on a persistent root. Age-gated + name-keyed, so it never
         // touches the resolved output or an in-flight build.
-        reapStaleAttempts(fs, p, resolved)
+        reapStaleAttempts(fs, p, resolved.path)
         done.put(key, resolved)
         resolved
       }
     }
-    s.read.parquet(path)
   }
+
+  /** The part files of an attempt directory. */
+  private def partFiles(fs: FileSystem, attempt: Path): Seq[FileStatus] =
+    fs.listStatus(attempt).toSeq
+      .filter(st => !st.isDirectory && st.getPath.getName.startsWith("part-"))
+
+  /** The manifest of a finished attempt: rows and codecs from its
+    * part-file footers (no Spark job), bytes and files from its
+    * listing. A stage with no row group (zero rows) has codec `none`. */
+  private def describe(fs: FileSystem, attempt: Path, schema: StructType,
+      buildS: Double): Manifest = {
+    val parts = partFiles(fs, attempt)
+    val blocks = parts.flatMap { st =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, fs.getConf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala
+    }
+    val codecs = blocks.flatMap(_.getColumns.asScala.map(_.getCodec.name.toLowerCase))
+      .distinct.sorted
+    Manifest(schema, blocks.map(_.getRowCount).sum, parts.map(_.getLen).sum,
+      parts.size, if (codecs.isEmpty) "none" else codecs.mkString(","), buildS)
+  }
+
+  /** Whether the attempt a pointer names still holds the part files and
+    * bytes of its manifest. */
+  private def intact(fs: FileSystem, pub: Published): Boolean =
+    try {
+      val parts = partFiles(fs, new Path(pub.path))
+      parts.size == pub.manifest.files &&
+        parts.map(_.getLen).sum == pub.manifest.bytes
+    } catch { case _: java.io.FileNotFoundException => false }
 
   /** Target stage parquet file size: 256 MiB. Stage writes inherit the
     * build plan's output partitioning — at cluster core counts (or with
@@ -232,20 +361,18 @@ object Stages {
     * rewrite shuffle-free, and reading back the finished parquet makes
     * the sizing exact where any pre-write estimate (plan statistics)
     * can be off by the compression factor. */
-  private def compactAttempt(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      attempt: org.apache.hadoop.fs.Path): Unit = {
-    val parts = fs.listStatus(attempt).filter(st =>
-      !st.isDirectory && st.getPath.getName.startsWith("part-"))
+  private def compactAttempt(s: SparkSession, fs: FileSystem,
+      attempt: Path, schema: StructType): Unit = {
+    val parts = partFiles(fs, attempt)
     val n = parts.length
     if (n <= 1) return
     val bytes = parts.map(_.getLen).sum
     val ideal = math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)
     if (n <= ideal || bytes / n >= TargetFileBytes / 2) return
-    val tmp = new org.apache.hadoop.fs.Path(s"$attempt-compact")
-    s.read.parquet(attempt.toString)
+    val tmp = new Path(s"$attempt-compact")
+    s.read.schema(schema).parquet(attempt.toString)
       .coalesce(ideal.toInt)
-      .write.mode("overwrite").parquet(tmp.toString)
+      .write.mode("overwrite").option("compression", Codec).parquet(tmp.toString)
     // private pre-publish swap: a failure here fails the build (the
     // attempt was never published), so partial states cannot be read
     fs.delete(attempt, true)
@@ -353,18 +480,16 @@ object Stages {
     * reaper (or a [[reapUnreferenced]] pass on a persistent root). */
   def reset(): Unit = done.clear()
 
-  /** Stage names this JVM has resolved since the last [[reset]] —
-    * the WarmSpec completeness guard diffs this across "warm, then
-    * construct every declared plan" to catch a stage accessor that was
-    * added without a [[Warm.stages]] entry (its build cost would
-    * silently land on the first bench consumer instead of
-    * `stages_sec`). */
-  private[graft] def resolvedStageNames: Set[String] = {
-    val it = done.keys()
-    val out = Set.newBuilder[String]
-    while (it.hasMoreElements) out += it.nextElement().split('|').head
-    out.result()
-  }
+  /** The stages this JVM has resolved since the last [[reset]], by
+    * stage name — the WarmSpec completeness guard diffs the names across
+    * "warm, then construct every declared plan" to catch a stage
+    * accessor that was added without a [[Warm.stages]] entry (its build
+    * cost would silently land on the first bench consumer instead of
+    * `stages_sec`), and Profile reports their manifests. */
+  private[graft] def resolved: Seq[Published] =
+    done.values().asScala.toSeq.sortBy(p => (p.stage, p.path))
+
+  private[graft] def resolvedStageNames: Set[String] = resolved.map(_.stage).toSet
 
   /** Published stage UNITS (`<stage>-<contenthash>` pointer basenames)
     * this JVM currently references — the live set for
@@ -374,16 +499,12 @@ object Stages {
     * then hands this set to the reaper — anything published under the
     * root that no current definition resolves to is a superseded code
     * version's leftover. */
-  def liveStageUnits: Set[String] = {
-    val it = done.elements()
-    val out = Set.newBuilder[String]
-    while (it.hasMoreElements) {
-      val name = new org.apache.hadoop.fs.Path(it.nextElement()).getName
+  def liveStageUnits: Set[String] =
+    resolved.map { p =>
+      val name = new Path(p.path).getName
       val cut = name.lastIndexOf("-attempt-")
-      out += (if (cut >= 0) name.substring(0, cut) else name)
-    }
-    out.result()
-  }
+      if (cut >= 0) name.substring(0, cut) else name
+    }.toSet
 
   /** Garbage-collect published stage units under `root` that are (a)
     * NOT in `liveUnits` and (b) older than `minAgeDays` — the

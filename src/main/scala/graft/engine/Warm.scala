@@ -16,9 +16,14 @@ import org.apache.spark.sql.SparkSession
   * content-and-definition-keyed stage path is identical — a duplicated
   * build definition here would fingerprint to a different path and the
   * queries would rebuild anyway. A stage added later but not listed
-  * here still works; it just gets charged to its first consumer. */
+  * here still works; it just gets charged to its first consumer.
+  *
+  * It also keeps the schema of every source table ([[Sources.read]]),
+  * so that after it no declared query launches a job while it is
+  * built, beyond those on ConstructJobsSpec's allowlist. */
 object Warm {
   def stages(s: SparkSession, d: String): Unit = {
+    Sources.warm(s, d)
     Sources.region(s, d); Sources.nation(s, d); Sources.customer(s, d)
     Sources.supplier(s, d); Sources.part(s, d)
     TextOps.corpus(s, d); TextOps.sharedDocToks(s, d)

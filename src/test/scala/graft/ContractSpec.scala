@@ -49,6 +49,31 @@ class ContractSpec extends SparkSpec {
       s"mains: ${mains.sorted}")
   }
 
+  test("every schema-inferring read.parquet( in src/main is allowlisted") {
+    // a bare `read.parquet(` infers the schema with a Spark job on every
+    // call; library reads pass a kept schema (Sources.read, stage hits)
+    val allowed: Map[String, (Int, String)] = Map(
+      "engine/Sources.scala" -> (1, "Sources.read infers a source schema once per JVM, then passes it"),
+      "engine/Stages.scala" -> (1, "a stage build infers its schema once, for the manifest hits read with"),
+      "engine/Layout.scala" -> (1, "Layout.compact reads a flat table once to rewrite it whole"),
+      "api/FlowEngine.scala" -> (2, "FlowEngine's one-time schema capture (connect, first touch)"),
+      "ScaleGen.scala" -> (2, "ScaleGen reads each table once to replicate it and once to report rows"),
+      "Bench.scala" -> (1, "the JVM warm-up read before the timed loop"),
+      "Profile.scala" -> (1, "the JVM warm-up read, as Bench's"),
+    )
+    val root = new java.io.File("src/main/scala/graft")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val found = files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      val n = java.nio.file.Files.readAllLines(f.toPath).toArray.map(_.toString.trim)
+        .filterNot(l => l.startsWith("//") || l.startsWith("*"))
+        .map("""read\.parquet\(""".r.findAllMatchIn(_).size).sum
+      if (n > 0) Some(root.toPath.relativize(f.toPath).toString -> n) else None
+    }.toMap
+    assert(found == allowed.map { case (f, (n, _)) => f -> n },
+      s"bare read.parquet( calls per file: $found")
+  }
+
   /** The q_pack_seqs lesson (round 3's one red row): a final ORDER BY
     * whose keys can tie across rows that differ elsewhere lets the two
     * engines emit different row orders — the driver hashes rows in

@@ -59,6 +59,41 @@ class ProfileSpec extends SparkSpec {
     assert(!r.has("jobs"))
   }
 
+  test("construction jobs and CPU are reported apart from execution jobs") {
+    // after Warm.stages, q_scan_project's source read keeps its schema
+    // (no job while built); q_sim_ivf collects its centroids while built
+    graft.engine.Warm.stages(spark, sf)
+    val lines = Seq.newBuilder[String]
+    Profile.profile(spark, sf, Seq("q_scan_project", "q_sim_ivf"), reps = 1)(lines += _)
+    val mapper = new ObjectMapper()
+    val rs = lines.result().map(mapper.readTree).map(r => r.get("query").asText -> r).toMap
+    val scan = rs("q_scan_project")
+    assert(scan.get("construct_jobs").asInt == 0, scan.toString)
+    assert(scan.get("construct_cpu_s").asDouble == 0.0, scan.toString)
+    assert(scan.get("jobs").asInt >= 1, scan.toString)
+    val ivf = rs("q_sim_ivf")
+    assert(ivf.get("construct_jobs").asInt >= 1, ivf.toString)
+    assert(ivf.get("construct_cpu_s").asDouble > 0, ivf.toString)
+    assert(ivf.get("jobs").asInt >= 1, ivf.toString)
+  }
+
+  test("one stage record per resolved stage, from its manifest") {
+    graft.engine.Stages.reset()
+    graft.engine.Warm.stages(spark, sf)
+    val lines = Seq.newBuilder[String]
+    Profile.stageRecords(lines += _)
+    val mapper = new ObjectMapper()
+    val recs = lines.result().map(mapper.readTree)
+    assert(recs.map(_.get("stage").asText).toSet == graft.engine.Stages.resolvedStageNames)
+    assert(recs.size == 20, recs.map(_.get("stage").asText))
+    for (r <- recs) {
+      assert(r.get("rows").asLong >= 0 && r.get("bytes").asLong > 0, r.toString)
+      assert(r.get("files").asInt >= 1 && r.get("build_s").asDouble >= 0, r.toString)
+      assert(r.get("codec").asText == (if (r.get("rows").asLong > 0) "zstd" else "none"),
+        r.toString)
+    }
+  }
+
   test("a frame the caller left persisted does not feed the profiled query") {
     // the scan q_scan_project reads, cached and materialized by the caller
     val cached = graft.engine.Sources.lineitem(spark, sf).persist()

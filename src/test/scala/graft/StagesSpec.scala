@@ -139,6 +139,52 @@ class StagesSpec extends SparkSpec {
     dropCrc()
   }
 
+  test("a published stage with a part file deleted is rebuilt, not served") {
+    val dir = java.nio.file.Files.createTempDirectory("spec-truncated").toString
+    val builds = new AtomicInteger(0)
+    def stage() = Stages.resolve(spark, "spec_truncated", dir) {
+      builds.incrementAndGet(); spark.range(50).toDF("id")
+    }
+    val first = stage()
+    assert(first.manifest.rows == 50 && first.manifest.files == 1)
+    val parts = new java.io.File(first.path).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1)
+    parts.foreach(_.delete())
+    Stages.reset()
+    val again = stage()
+    assert(again.path != first.path, "the truncated attempt was served")
+    assert(again.read(spark).count() == 50)
+    assert(new java.io.File(again.path).listFiles().count(_.getName.startsWith("part-")) == 1)
+  }
+
+  test("a rewritten input file gives a new stage path within one JVM") {
+    val dir = java.nio.file.Files.createTempDirectory("spec-refresh")
+    val input = dir.resolve("t.txt")
+    java.nio.file.Files.write(input, "a".getBytes("UTF-8"))
+    def stage() = Stages.resolve(spark, "spec_refresh", dir.toString) {
+      spark.range(3).toDF("id")
+    }
+    val before = stage()
+    assert(stage().path == before.path)
+    java.nio.file.Files.write(input, "bb".getBytes("UTF-8"))
+    val after = stage()
+    assert(after.path != before.path, "a rewritten input kept the old stage")
+    assert(after.read(spark).count() == 3)
+  }
+
+  test("each warmed stage's manifest holds the schema and rows a bare read sees") {
+    Stages.reset()
+    graft.engine.Warm.stages(spark, sf)
+    val stages = Stages.resolved
+    assert(stages.map(_.stage).toSet.size == 20, stages.map(_.stage))
+    for (p <- stages) {
+      val bare = spark.read.parquet(p.path)
+      assert(p.manifest.schema == bare.schema, s"${p.stage}: schema")
+      assert(p.manifest.schema.json == bare.schema.json, s"${p.stage}: field metadata")
+      assert(p.manifest.rows == bare.count(), s"${p.stage}: rows")
+    }
+  }
+
   test("dedupIncremental drops corpus dups and keep-first batch dups") {
     import spark.implicits._
     def doc(lo: Int, n: Int): String = (lo until lo + n).map(i => s"w$i").mkString(" ")
